@@ -25,7 +25,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .localrel import collect_at_most, literal_df
+
 __all__ = ["connected_components"]
+
+# Edge-count cap for the driver union-find: the graph is collected and
+# its (node, comp) answer rides a literal relation of ≤ 2 × cap rows,
+# inside localrel's O(10k)-row contract.  Dedup candidate-pair graphs
+# sit far below it (dedup_clusters_cc: 44 edges at sf0.01, 740 at sf0.1).
+_DRIVER_MAX_EDGES = 5_000
 
 
 def connected_components(
@@ -46,31 +54,18 @@ def connected_components(
         eager=True
     )
 
-    # Small-graph fast path (r10): the connected-component PARTITION of
-    # a graph is unique and the label is canonical (min node id per
+    # Small-graph fast path: the connected-component PARTITION of a
+    # graph is unique and the label is canonical (min node id per
     # component), so ANY correct algorithm returns bit-identical rows —
-    # when the materialized edge list is small by exact post-checkpoint
-    # Catalyst stats, a driver union-find replaces the 2-actions-per-
-    # round propagation loop (≈10 tiny jobs on candidate-pair graphs —
-    # pure scheduling overhead; the same bounded-state stance as the
-    # trainer collects: dedup candidate-pair tables are pair-grain,
-    # orders of magnitude below corpus grain).  Past the threshold the
-    # pointer-jumping loop runs unchanged — that is the 100 TB path.
-    import os
-
-    try:
-        est = int(
-            fwd._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:  # noqa: BLE001 — stats are advisory; assume big
-        est = 1 << 62
-    small_bytes = int(
-        os.environ.get("SPARK_GRAFT_CC_SMALL_BYTES", str(8 << 20))
-    )
-    if est <= small_bytes:
-        out = _connected_components_driver(fwd)
-        if out is not None:
-            return out
+    # when the materialized edge list has at most _DRIVER_MAX_EDGES
+    # rows, a driver union-find replaces the 2-actions-per-round
+    # propagation loop (≈10 tiny jobs on candidate-pair graphs — pure
+    # scheduling overhead).  The count is exact (collect_at_most), not
+    # a Catalyst estimate (see localrel.plan_size_bytes).  Past the cap
+    # the pointer-jumping loop runs unchanged — that is the 100 TB path.
+    out = _connected_components_driver(fwd)
+    if out is not None:
+        return out
 
     sym = fwd.unionByName(fwd.select(F.col("b").alias("a"), F.col("a").alias("b")))
 
@@ -114,14 +109,20 @@ def _connected_components_driver(fwd: DataFrame):
     """Driver union-find over a collected (a, b) edge list — the
     small-graph body of :func:`connected_components`.  Returns the
     same (node, comp) frame (comp = min member id, components are
-    unique), as a literal relation; None when the node type cannot
-    ride a literal plan (caller falls back to the distributed loop)."""
-    from .localrel import literal_df
-
+    unique), as a literal relation; None — the caller falls back to
+    the distributed loop — when the node type cannot ride a literal
+    plan, the graph has more than ``_DRIVER_MAX_EDGES`` edges, or an
+    endpoint is NULL (the loop's NULL semantics are not replicated
+    here)."""
     node_t = fwd.schema["a"].dataType.simpleString()
     if node_t not in ("bigint", "int", "smallint", "tinyint", "string"):
         return None
-    pairs = [(r.a, r.b) for r in fwd.collect()]
+    rows = collect_at_most(fwd, _DRIVER_MAX_EDGES)
+    if rows is None:
+        return None
+    pairs = [(r.a, r.b) for r in rows]
+    if any(a is None or b is None for a, b in pairs):
+        return None
     parent: dict = {}
 
     def find(x):

@@ -27,8 +27,14 @@ Two literal encodings, same plan shape, chosen automatically:
 
 For BOUNDED frames only: every value is embedded in the query plan, so
 callers keep rows at O(100s) — grid/sweep tables, quantile targets,
-centroid tables, per-group offset maps.  Data-sized frames keep the
-normal read path.
+centroid tables, per-group offset maps — and never past O(10k).  Data-
+sized frames keep the normal read path.
+
+The driver fast paths that turn a collected frame into such a literal
+decide with :func:`collect_at_most`: an exact row cap, enforced by the
+same collect that feeds the driver loop.  :func:`plan_size_bytes` is
+the one Catalyst stats probe, for the fast path that stays distributed
+(``ranking.grouped_exact_quantiles``).
 """
 
 from __future__ import annotations
@@ -168,3 +174,25 @@ def literal_double_array(values):
     if not all(math.isfinite(v) for v in vals):
         return F.array(*[F.lit(v) for v in vals])
     return F.from_json(F.lit(json.dumps(vals)), "array<double>")
+
+
+def plan_size_bytes(df: DataFrame) -> int:
+    """Catalyst's optimized-plan size estimate for ``df`` (``1 << 62``
+    when stats are unavailable).  An estimate only: scans are close, but
+    a localCheckpointed frame inherits its origin plan's join estimates,
+    so a checkpointed 44-row candidate-pair graph can read as ~10¹¹ B.
+    Fine as a conservative gate; never a row bound."""
+    try:
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:  # noqa: BLE001 — stats are advisory; assume big
+        return 1 << 62
+
+
+def collect_at_most(df: DataFrame, max_rows: int):
+    """``df``'s rows when it has at most ``max_rows`` of them, else
+    None — one ``limit(max_rows + 1).collect()``, so the decision is
+    exact and the driver never receives more than ``max_rows + 1``
+    rows.  The gate for every driver fast path whose result becomes a
+    literal relation."""
+    rows = df.limit(max_rows + 1).collect()
+    return rows if len(rows) <= max_rows else None

@@ -34,11 +34,12 @@ single-partition plan.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from .localrel import plan_size_bytes
 
 __all__ = [
     "bucketed_global_rank",
@@ -57,21 +58,13 @@ _BUCKET = "_rk_bucket"
 # single-partition plan), which is one comfortable task at this size
 # on any cluster, and saves the cut-sketch action plus the per-bucket
 # literal machinery.  The estimate comes from Catalyst plan statistics
-# (accurate for scans and localCheckpointed frames; join plans inflate
-# multiplicatively and therefore conservatively take the bucketed
-# path).  Scale-adaptive by DATA SIZE, not by local core count — on a
-# 100 TB input the stats exceed the threshold and the bucketed path
-# runs exactly as before.
-_QUANTILE_SMALL_BYTES = int(
-    os.environ.get("SPARK_GRAFT_QUANTILE_SMALL_BYTES", str(128 << 20))
-)
-
-
-def _plan_size_bytes(df: DataFrame) -> int:
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # noqa: BLE001 — stats are advisory; assume big
-        return 1 << 62
+# (``localrel.plan_size_bytes``: close for scans; join plans — and
+# localCheckpointed frames, which inherit their origin plan's join
+# estimates — inflate multiplicatively and therefore conservatively take
+# the bucketed path).  Scale-adaptive by DATA SIZE, not by local core
+# count — on a 100 TB input the stats exceed the threshold and the
+# bucketed path runs exactly as before.
+_QUANTILE_SMALL_BYTES = 128 << 20
 
 
 def _bucket_of(lead: Column, cuts: Sequence[float]) -> Column:
@@ -317,13 +310,13 @@ def grouped_exact_quantiles(
     if checkpoint_input:
         df = df.localCheckpoint(eager=True)
     lead = F.col(value_col).cast("double")
-    small = _plan_size_bytes(df) <= _QUANTILE_SMALL_BYTES
+    small = plan_size_bytes(df) <= _QUANTILE_SMALL_BYTES
     if small:
         # Log the routing so a stats-misestimate that sends a large
         # input down the whole-group-sort path is diagnosable
-        # (advisor r9, low) — stats are exact for scans and
-        # localCheckpointed frames, the two shapes every registered
-        # caller feeds this operator.
+        # (advisor r9, low).  Registered callers feed this operator
+        # scans and checkpoints of joins, whose estimates err large —
+        # toward the bucketed path, never away from it.
         import logging
 
         logging.getLogger(__name__).debug(

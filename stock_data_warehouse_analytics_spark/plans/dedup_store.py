@@ -22,15 +22,11 @@ Correctness is unchanged: the stored frames are the IDENTICAL
 expressions the operators build internally (the operators take them
 via the ``sh``/``sig`` override params), just materialized once.
 
-Cache stance: WeakKeyDictionary on the session (the `_IVF_CACHE` /
-`_hybrid_legs_for` pattern).  STALENESS contract: keyed by sf_dir;
-test data is immutable per run — a pipeline that rewrites parquet
-under sf_dir must start a fresh session.
+Memoised per (session, sf_dir) through ``session.session_memo`` (its
+docstring holds the staleness contract).
 """
 
 from __future__ import annotations
-
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -40,19 +36,16 @@ from ..operators.dedup import (
     shingle_table,
     simhash_near_pairs,
 )
+from ..session import session_memo
 from ..sources.tables import load_table
-
-_STORE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
 
 
 def _slot(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
-    per_session = _STORE.setdefault(spark, {})
-    key = (sf_dir, name)
-    if key not in per_session:
-        per_session[key] = build().localCheckpoint(eager=True)
-    return per_session[key]
+    return session_memo(
+        spark,
+        ("dedup_store", sf_dir, name),
+        lambda: build().localCheckpoint(eager=True),
+    )
 
 
 def staged_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:

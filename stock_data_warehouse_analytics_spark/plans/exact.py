@@ -55,10 +55,6 @@ def set_fast_aggregates(on: bool) -> None:
     _FAST = bool(on)
 
 
-def fast_aggregates_enabled() -> bool:
-    return _FAST
-
-
 def dsum(col: Column | str) -> Column:
     """Order-independent exact sum of a double expression → double
     (plain double sum in fast mode)."""
@@ -88,8 +84,7 @@ def dstddev_samp(col: Column | str) -> Column:
     """Sample stddev from exact moments: sqrt((m2 - s*s/n)/(n-1)).
 
     pandas ``.std()`` is ddof=1 (SURVEY.md §4.2 watch-list) → this is the
-    sample flavor; see :func:`dstddev_pop` for sklearn StandardScaler
-    parity (ddof=0).
+    sample flavor.
     """
     c = F.col(col) if isinstance(col, str) else col
     s = dsum(c)
@@ -103,21 +98,6 @@ def sql_dstddev_samp(expr: str) -> str:
     m2 = sql_dsum(f"({expr}) * ({expr})")
     n = f"COUNT({expr})"
     return f"SQRT((({m2}) - ({s}) * ({s}) / ({n})) / (({n}) - 1))"
-
-
-def dstddev_pop(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    s = dsum(c)
-    m2 = dsum(c * c)
-    n = F.count(c)
-    return F.sqrt((m2 - s * s / n) / n)
-
-
-def sql_dstddev_pop(expr: str) -> str:
-    s = sql_dsum(expr)
-    m2 = sql_dsum(f"({expr}) * ({expr})")
-    n = f"COUNT({expr})"
-    return f"SQRT((({m2}) - ({s}) * ({s}) / ({n})) / ({n}))"
 
 
 def _complete_pair(x: Column, y: Column) -> tuple[Column, Column]:
@@ -136,24 +116,6 @@ def _sql_complete_pair(ex: str, ey: str) -> tuple[str, str]:
         f"(CASE WHEN {both} THEN ({ex}) END)",
         f"(CASE WHEN {both} THEN ({ey}) END)",
     )
-
-
-def dcovar_samp(x: Column | str, y: Column | str) -> Column:
-    cx = F.col(x) if isinstance(x, str) else x
-    cy = F.col(y) if isinstance(y, str) else y
-    mx, my = _complete_pair(cx, cy)
-    sx, sy = dsum(mx), dsum(my)
-    sxy = dsum(mx * my)
-    n = F.count(mx * my)
-    return (sxy - sx * sy / n) / (n - F.lit(1))
-
-
-def sql_dcovar_samp(ex: str, ey: str) -> str:
-    mx, my = _sql_complete_pair(ex, ey)
-    sx, sy = sql_dsum(mx), sql_dsum(my)
-    sxy = sql_dsum(f"({mx}) * ({my})")
-    n = f"COUNT(({mx}) * ({my}))"
-    return f"((({sxy}) - ({sx}) * ({sy}) / ({n})) / (({n}) - 1))"
 
 
 # ---------------------------------------------------------------------------

@@ -11,8 +11,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-import weakref
-
 from ..operators.similarity import (
     _plane,
     kcenter_select,
@@ -29,33 +27,28 @@ from ..operators.similarity import (
     topk_ivf_probe,
     topk_lsh,
 )
+from ..session import session_memo
 from ..sources.tables import load_table
 from .registry import register
-
-# Session-scoped IVF quantizer cache: fit once per (session, sf_dir),
-# probe many times — the deployment shape (the quantizer is a bounded
-# k×dim artifact; refitting per query batch would re-run k-means|| on
-# the whole corpus).  Weak session keys like sources.tables._TABLE_CACHE.
-_IVF_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[str, tuple[DataFrame, DataFrame]]]" = (
-    weakref.WeakKeyDictionary()
-)
-
 
 def ivf_quantizer(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """(assigned, centers) for the standard corpus quantizer
-    (n_cells=16, seed 42, maxIter 5) — fit on first use per session,
-    reused by every subsequent probe."""
-    per_session = _IVF_CACHE.setdefault(spark, {})
-    key = sf_dir
-    if key not in per_session:
-        e = load_table(spark, sf_dir, "embeddings")
-        # maxIter 5: a coarse quantizer needs rough cells, not
-        # convergence — k-means|| init does most of the work and each
-        # Lloyd iteration is a driver-coordinated job round
-        per_session[key] = fit_ivf_quantizer(e, n_cells=16, max_iter=5)
-    return per_session[key]
+    (n_cells=16, seed 42, maxIter 5) — fit on first use per session
+    (``session_memo``), reused by every subsequent probe: the deployment
+    shape (the quantizer is a bounded k×dim artifact; refitting per
+    query batch would re-run k-means|| on the whole corpus)."""
+    # maxIter 5: a coarse quantizer needs rough cells, not
+    # convergence — k-means|| init does most of the work and each
+    # Lloyd iteration is a driver-coordinated job round
+    return session_memo(
+        spark,
+        ("llm_similarity.ivf", sf_dir),
+        lambda: fit_ivf_quantizer(
+            load_table(spark, sf_dir, "embeddings"), n_cells=16, max_iter=5
+        ),
+    )
 
 _DIM = 64
 # normalize-once mirror of operators.similarity.normalize: per-element
@@ -193,32 +186,18 @@ _TUNE_K = 5
 _NCELLS_SWEEP = (4, 8, 16, 32)  # quantizer sizes; nprobe fixed below
 _NCELLS_NPROBE = 2
 
-# Per-(session, sf_dir, n_cells) quantizer cache for the N_CELLS sweep:
-# each sweep point is a DIFFERENT index (refit required), but within a
-# session each index is fit once — sampled via fit_sample_per_cell so
-# every Lloyd pass is codebook-sized, not corpus-sized.
-_NCELLS_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-# Shared brute-force truth for the tuning curves: the fixed
-# (vec_id < _TUNE_NQ, k=_TUNE_K) ground-truth list is identical for
-# every recall eval — ≤ k·|Q| rows, materialized once per
-# (session, sf_dir).
-_TUNE_TRUTH_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def _tune_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    per_session = _TUNE_TRUTH_CACHE.setdefault(spark, {})
-    if sf_dir not in per_session:
+    """Shared brute-force truth for the tuning curves: the fixed
+    (vec_id < _TUNE_NQ, k=_TUNE_K) ground-truth list is identical for
+    every recall eval — ≤ k·|Q| rows, materialized once per
+    (session, sf_dir) through ``session_memo``."""
+
+    def build() -> DataFrame:
         e = load_table(spark, sf_dir, "embeddings")
         queries = e.filter(F.col("vec_id") < _TUNE_NQ)
-        per_session[sf_dir] = topk_bruteforce(
-            e, queries, k=_TUNE_K
-        ).localCheckpoint(eager=True)
-    return per_session[sf_dir]
+        return topk_bruteforce(e, queries, k=_TUNE_K).localCheckpoint(eager=True)
+
+    return session_memo(spark, ("llm_similarity.tune_truth", sf_dir), build)
 
 
 def _lloyd_numpy(X, H, k: int, iters: int):
@@ -249,7 +228,16 @@ def _lloyd_numpy(X, H, k: int, iters: int):
     return centers
 
 
-def _ncells_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict]:
+def _ncells_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict, DataFrame]:
+    """:func:`_build_ncells_index`, memoised per (session, sf_dir)."""
+    return session_memo(
+        spark,
+        ("llm_similarity.ncells", sf_dir),
+        lambda: _build_ncells_index(spark, sf_dir),
+    )
+
+
+def _build_ncells_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict, DataFrame]:
     """The whole N_CELLS sweep's index state, built ONCE per (session,
     sf_dir): one normalize+materialize pass over the corpus, ONE
     bounded sample collect feeding every sweep point's Lloyd fit on
@@ -267,79 +255,76 @@ def _ncells_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict]:
     from ..operators.kmeans import assign_codes_multi
     from ..operators.similarity import normalize
 
-    per_session = _NCELLS_CACHE.setdefault(spark, {})
-    if sf_dir not in per_session:
-        e = load_table(spark, sf_dir, "embeddings")
-        cp = e.select(
-            F.col("vec_id").alias("neighbor_id"),
-            normalize(F.col("embedding")).alias("_cn"),
-        ).localCheckpoint(eager=True)
-        n = cp.count()
-        h60 = hash_int60(F.col("neighbor_id").cast("string"))
-        bucket = h60 % 1_000_000
-        max_target = max(_NCELLS_SWEEP) * 200
-        # ONE sample collect covers every sweep point: the per-nc hash
-        # samples are NESTED (keep_nc grows with the target), so
-        # filtering the widest sample driver-side reproduces each
-        # fit_sample_per_cell input exactly.  Bounded: ≤ max_target
-        # rows when n > max_target, ≤ n ≤ max_target otherwise.
-        keep_max = (
-            max(1, int(max_target * 1_000_000 // n)) if n > max_target else None
-        )
-        widest = cp if keep_max is None else cp.filter(bucket < keep_max)
-        sample = widest.select(
-            "neighbor_id", "_cn", h60.alias("_h"), bucket.alias("_b")
-        ).collect()  # BOUNDED: ≤ max(sweep)·fit_sample_per_cell rows
-        X_all = np.array([r._cn for r in sample], dtype=np.float64)
-        H_all = np.array([r._h for r in sample], dtype=np.int64)
-        B_all = np.array([r._b for r in sample], dtype=np.int64)
-        books: dict[int, "object"] = {}
-        for nc in _NCELLS_SWEEP:
-            target = nc * 200  # fit_sample_per_cell=200 discipline
-            X, H = X_all, H_all
-            if n > target:
-                keep = max(1, int(target * 1_000_000 // n))
-                m = B_all < keep
-                if int(m.sum()) >= nc:
-                    X, H = X_all[m], H_all[m]
-            # iters=3 (vs the production quantizer's 5): the sweep
-            # compares index SIZES, and the hash seeding does most of
-            # the placement — extra Lloyd rounds shift absolute recall
-            # a little but not the size comparison
-            books[nc] = _lloyd_numpy(X, H, k=nc, iters=3)
-        multi = assign_codes_multi(
-            # the checkpointed corpus is one local split — fan the
-            # Arrow kernel out (same single-split gotcha as the PNG
-            # codec stage)
-            cp.repartition(8),
-            {f"cell_{nc}": c for nc, c in books.items()},
-            vec_col="_cn",
-        ).localCheckpoint(eager=True)
-        from ..operators.localrel import literal_df
+    e = load_table(spark, sf_dir, "embeddings")
+    cp = e.select(
+        F.col("vec_id").alias("neighbor_id"),
+        normalize(F.col("embedding")).alias("_cn"),
+    ).localCheckpoint(eager=True)
+    n = cp.count()
+    h60 = hash_int60(F.col("neighbor_id").cast("string"))
+    bucket = h60 % 1_000_000
+    max_target = max(_NCELLS_SWEEP) * 200
+    # ONE sample collect covers every sweep point: the per-nc hash
+    # samples are NESTED (keep_nc grows with the target), so
+    # filtering the widest sample driver-side reproduces each
+    # fit_sample_per_cell input exactly.  Bounded: ≤ max_target
+    # rows when n > max_target, ≤ n ≤ max_target otherwise.
+    keep_max = (
+        max(1, int(max_target * 1_000_000 // n)) if n > max_target else None
+    )
+    widest = cp if keep_max is None else cp.filter(bucket < keep_max)
+    sample = widest.select(
+        "neighbor_id", "_cn", h60.alias("_h"), bucket.alias("_b")
+    ).collect()  # BOUNDED: ≤ max(sweep)·fit_sample_per_cell rows
+    X_all = np.array([r._cn for r in sample], dtype=np.float64)
+    H_all = np.array([r._h for r in sample], dtype=np.int64)
+    B_all = np.array([r._b for r in sample], dtype=np.int64)
+    books: dict[int, "object"] = {}
+    for nc in _NCELLS_SWEEP:
+        target = nc * 200  # fit_sample_per_cell=200 discipline
+        X, H = X_all, H_all
+        if n > target:
+            keep = max(1, int(target * 1_000_000 // n))
+            m = B_all < keep
+            if int(m.sum()) >= nc:
+                X, H = X_all[m], H_all[m]
+        # iters=3 (vs the production quantizer's 5): the sweep
+        # compares index SIZES, and the hash seeding does most of
+        # the placement — extra Lloyd rounds shift absolute recall
+        # a little but not the size comparison
+        books[nc] = _lloyd_numpy(X, H, k=nc, iters=3)
+    multi = assign_codes_multi(
+        # the checkpointed corpus is one local split — fan the
+        # Arrow kernel out (same single-split gotcha as the PNG
+        # codec stage)
+        cp.repartition(8),
+        {f"cell_{nc}": c for nc, c in books.items()},
+        vec_col="_cn",
+    ).localCheckpoint(eager=True)
+    from ..operators.localrel import literal_df
 
-        centers = {
-            nc: literal_df(
-                spark,
-                [(i, [float(x) for x in cen]) for i, cen in enumerate(c)],
-                "cell int, cvec array<double>",
-            )
-            for nc, c in books.items()
-        }
-        # ONE stacked centroid table as a LITERAL local relation
-        # (literal_df's from_json encoding: one string literal carries
-        # all Σsweep × dim doubles across py4j — the per-cell F.lit
-        # form cost ~4 s of driver→JVM calls for this table alone)
-        centers_all = literal_df(
+    centers = {
+        nc: literal_df(
             spark,
-            [
-                (nc, i, [float(x) for x in cen])
-                for nc, c in books.items()
-                for i, cen in enumerate(c)
-            ],
-            "n_cells int, cell int, cvec array<double>",
+            [(i, [float(x) for x in cen]) for i, cen in enumerate(c)],
+            "cell int, cvec array<double>",
         )
-        per_session[sf_dir] = (multi, centers, centers_all)
-    return per_session[sf_dir]
+        for nc, c in books.items()
+    }
+    # ONE stacked centroid table as a LITERAL local relation
+    # (literal_df's from_json encoding: one string literal carries
+    # all Σsweep × dim doubles across py4j — the per-cell F.lit
+    # form cost ~4 s of driver→JVM calls for this table alone)
+    centers_all = literal_df(
+        spark,
+        [
+            (nc, i, [float(x) for x in cen])
+            for nc, c in books.items()
+            for i, cen in enumerate(c)
+        ],
+        "n_cells int, cell int, cvec array<double>",
+    )
+    return multi, centers, centers_all
 
 
 def _ncells_quantizer(
@@ -744,23 +729,22 @@ def emb_semantic_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-_IVF2_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def ivf2_quantizer(spark: SparkSession, sf_dir: str):
-    """Session-cached two-level quantizer (4 coarse × 4 sub) — fit on
+    """Session-memoised two-level quantizer (4 coarse × 4 sub) — fit on
     first use, reused by every probe (the ivf_quantizer stance)."""
-    per_session = _IVF2_CACHE.setdefault(spark, {})
-    if sf_dir not in per_session:
-        e = load_table(spark, sf_dir, "embeddings")
-        # 3 Lloyd iterations per level: like the IVF-PQ fit, recall is
-        # routing-bound, not codebook-polish-bound (measured identical)
-        per_session[sf_dir] = fit_ivf2_quantizer(
-            e, n_coarse=4, n_sub=4, max_iter=3, sub_iters=3
-        )
-    return per_session[sf_dir]
+    # 3 Lloyd iterations per level: like the IVF-PQ fit, recall is
+    # routing-bound, not codebook-polish-bound (measured identical)
+    return session_memo(
+        spark,
+        ("llm_similarity.ivf2", sf_dir),
+        lambda: fit_ivf2_quantizer(
+            load_table(spark, sf_dir, "embeddings"),
+            n_coarse=4,
+            n_sub=4,
+            max_iter=3,
+            sub_iters=3,
+        ),
+    )
 
 
 @register(

@@ -19,7 +19,30 @@ import weakref
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "tune_for_engine"]
+__all__ = ["get_spark", "session_memo", "tune_for_engine"]
+
+# Per-session memo table behind session_memo().  Weak on the session so
+# entries die with it, and a new session allocated at a dead session's
+# address never receives frames bound to a stopped context.
+_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
+
+
+def session_memo(spark: SparkSession, key, build):
+    """The value memoised under ``key`` for ``spark``; ``build()`` runs
+    once, on the first request, and its result is reused by every later
+    request in the same session.  Keys are hashable tuples that start
+    with a namespace naming the owning module's substrate, so two sites
+    can never collide.
+
+    STALENESS CONTRACT (the one contract for every staged substrate in
+    the package): an entry is never invalidated.  Inputs are immutable
+    per session, so rewriting the parquet under an ``sf_dir`` within
+    one session keeps serving the pre-rewrite snapshot; a pipeline that
+    mutates its inputs must start a fresh session."""
+    per_session = _MEMO.setdefault(spark, {})
+    if key not in per_session:
+        per_session[key] = build()
+    return per_session[key]
 
 
 def _cpus() -> int:

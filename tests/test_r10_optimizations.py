@@ -9,7 +9,12 @@ the exact behavior of the path it replaced:
   path (the chunk_ann_lsh_topk rewiring);
 - literal_df's r10 hardening routes out-of-range ints and non-str
   strings to the legacy per-cell-literal path with identical frames;
-- literal_map rejects non-string keys loudly.
+- literal_map rejects non-string keys loudly;
+- connected_components' driver union-find == the distributed loop, and
+  a NULL endpoint sends the driver path back to the loop.
+
+Each dual path is forced from both sides by monkeypatching its module
+row cap (``text_ml._DRIVER_MAX_WORDS``, ``graph._DRIVER_MAX_EDGES``).
 """
 
 from __future__ import annotations
@@ -26,10 +31,8 @@ def _rows(df):
     return sorted(tuple(str(x) for x in r) for r in df.collect())
 
 
-def test_bpe_driver_path_matches_relational(spark):
-    from stock_data_warehouse_analytics_spark.operators.text_ml import (
-        bpe_train_merges,
-    )
+def test_bpe_driver_path_matches_relational(spark, monkeypatch):
+    from stock_data_warehouse_analytics_spark.operators import text_ml
 
     docs = spark.createDataFrame(
         [
@@ -39,17 +42,10 @@ def test_bpe_driver_path_matches_relational(spark):
         ],
         "doc_id long, text string",
     )
-    old = os.environ.get("SPARK_GRAFT_BPE_SMALL_BYTES")
-    try:
-        os.environ["SPARK_GRAFT_BPE_SMALL_BYTES"] = "0"  # force relational
-        m_rel, v_rel = bpe_train_merges(docs, rounds=6)
-        os.environ["SPARK_GRAFT_BPE_SMALL_BYTES"] = str(1 << 40)  # force driver
-        m_drv, v_drv = bpe_train_merges(docs, rounds=6)
-    finally:
-        if old is None:
-            os.environ.pop("SPARK_GRAFT_BPE_SMALL_BYTES", None)
-        else:
-            os.environ["SPARK_GRAFT_BPE_SMALL_BYTES"] = old
+    monkeypatch.setattr(text_ml, "_DRIVER_MAX_WORDS", 0)  # force relational
+    m_rel, v_rel = text_ml.bpe_train_merges(docs, rounds=6)
+    monkeypatch.setattr(text_ml, "_DRIVER_MAX_WORDS", 1 << 20)  # force driver
+    m_drv, v_drv = text_ml.bpe_train_merges(docs, rounds=6)
     assert _rows(m_rel) == _rows(m_drv)
     assert _rows(v_rel) == _rows(v_drv)
 
@@ -117,12 +113,22 @@ def test_literal_df_range_check_falls_back_identically(spark):
     assert df2.collect()[0].s == "true"
 
 
-@pytest.mark.parametrize("as_string", [False, True])
-def test_connected_components_driver_path_matches_loop(spark, as_string):
-    from stock_data_warehouse_analytics_spark.operators.graph import (
-        connected_components,
-    )
+def _cc_both_paths(monkeypatch, df):
+    """(loop rows, driver-path rows) for connected_components over df,
+    each side forced through the driver edge cap."""
+    from stock_data_warehouse_analytics_spark.operators import graph
 
+    monkeypatch.setattr(graph, "_DRIVER_MAX_EDGES", 0)  # force the loop
+    loop = _rows(graph.connected_components(df))
+    monkeypatch.setattr(graph, "_DRIVER_MAX_EDGES", 1 << 20)  # force driver
+    drv = _rows(graph.connected_components(df))
+    return loop, drv
+
+
+@pytest.mark.parametrize("as_string", [False, True])
+def test_connected_components_driver_path_matches_loop(
+    spark, monkeypatch, as_string
+):
     edges = [(1, 2), (2, 3), (5, 4), (7, 7), (10, 11), (11, 10), (4, 12)]
     if as_string:
         edges = [(f"n{a:02d}", f"n{b:02d}") for a, b in edges]
@@ -130,17 +136,23 @@ def test_connected_components_driver_path_matches_loop(spark, as_string):
     else:
         schema = "src long, dst long"
     df = spark.createDataFrame(edges, schema)
-    old = os.environ.get("SPARK_GRAFT_CC_SMALL_BYTES")
-    try:
-        os.environ["SPARK_GRAFT_CC_SMALL_BYTES"] = "0"  # force the loop
-        loop = _rows(connected_components(df))
-        os.environ["SPARK_GRAFT_CC_SMALL_BYTES"] = str(1 << 40)  # force driver
-        drv = _rows(connected_components(df))
-    finally:
-        if old is None:
-            os.environ.pop("SPARK_GRAFT_CC_SMALL_BYTES", None)
-        else:
-            os.environ["SPARK_GRAFT_CC_SMALL_BYTES"] = old
+    loop, drv = _cc_both_paths(monkeypatch, df)
+    assert loop == drv
+
+
+def test_connected_components_null_endpoint_falls_back_to_loop(
+    spark, monkeypatch
+):
+    """A NULL endpoint makes the driver union-find decline (it used to
+    raise TypeError comparing None with a node id); the forced-driver
+    call then runs the distributed loop and returns its rows."""
+    from stock_data_warehouse_analytics_spark.operators import graph
+
+    edges = [(1, 2), (2, 3), (None, 5), (6, None), (None, None), (8, 8)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    fwd = df.select(df.src.alias("a"), df.dst.alias("b"))
+    assert graph._connected_components_driver(fwd) is None
+    loop, drv = _cc_both_paths(monkeypatch, df)
     assert loop == drv
 
 
