@@ -149,10 +149,19 @@ def with_predicted_lang(df, text_col: str, out_col: str):
     optimizer's CollapseProject keeps the non-cheap regex aliases
     materialized because they are referenced more than once.  Same
     values, same tie-break — the argmax fold is identical expression-
-    for-expression, only over bound columns."""
+    for-expression, only over bound columns.
+
+    Raises ValueError if ``df`` already has a ``_plang_<lang>`` column:
+    the bound scores use those names and are dropped afterwards."""
     scores = lang_scores(F.col(text_col))
     langs = sorted(scores)
     tmp = {lang: f"_plang_{lang}" for lang in langs}
+    taken = {c.lower() for c in df.columns}  # Spark resolves case-insensitively
+    for name in tmp.values():
+        if name in taken:
+            raise ValueError(
+                f"with_predicted_lang: input already has column {name!r}"
+            )
     base = df.select("*", *[scores[lang].alias(tmp[lang]) for lang in langs])
     best = F.lit(langs[0])
     best_score = F.col(tmp[langs[0]])

@@ -41,6 +41,7 @@ __all__ = [
     "minhash_candidate_pairs",
     "simhash",
     "simhash_near_pairs",
+    "banded_hamming_pairs",
 ]
 
 # Mersenne prime 2^31−1: keeps a·(h mod p)+b < 2^62 — no int64 overflow
@@ -263,7 +264,6 @@ def exact_substring_spans(
         )
         .filter(F.col("span_tokens") >= min_span)
     )
-
 
 
 def union_intervals(
@@ -683,9 +683,25 @@ def simhash_near_pairs(
     whose 64-value buckets degenerate toward all-pairs on real corpora
     — the classic LSH recall/cost trade, resolved in favor of wide
     bands + measured recall)."""
+    return banded_hamming_pairs(
+        simhash_table(docs, bits=bits, text_col=text_col),
+        bits=bits,
+        bands=bands,
+        max_hamming=max_hamming,
+    )
+
+
+def banded_hamming_pairs(
+    sh: DataFrame, *, bits: int, bands: int, max_hamming: int
+) -> DataFrame:
+    """(doc_a < doc_b, hamming) for every pair of ``(doc_id, sh)``
+    ``bits``-bit hashes within ``max_hamming``: explode each hash into
+    ``bands`` band keys, bucket equi-join per band, verify with exact
+    ``bit_count(xor)``.  Pairs within ``bands − 1`` must share a band
+    (pigeonhole); beyond that recall is approximate.  Never an
+    all-pairs product."""
     width = bits // bands
     mask = (1 << width) - 1
-    sh = simhash_table(docs, bits=bits, text_col=text_col)
     band_structs = [
         F.struct(
             F.lit(b).alias("band"),
@@ -708,8 +724,8 @@ def simhash_near_pairs(
             F.col("b.doc_id").alias("doc_b"),
             ham.alias("hamming"),
         )
-        .distinct()
         .filter(F.col("hamming") <= max_hamming)
+        .distinct()
     )
 
 

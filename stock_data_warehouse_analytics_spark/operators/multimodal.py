@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .dedup import banded_hamming_pairs
+
 __all__ = [
     "BLOB_SCHEMA",
     "attach_blob",
@@ -479,6 +481,33 @@ def _png_codec():
 _png_encode_filtered, _png_decode = _png_codec()
 
 
+def _ahash_fn():
+    """The 64-bit average perceptual hash (aHash) of a decoded (h, w, 3)
+    pixel array as a NESTED closure (shipped by value, like
+    ``_png_codec``): grayscale ((r+g+b)//3), block-mean downsample to
+    8×8 (cropping to block multiples), bit i = cell i above the mean of
+    the 64 cells, packed two's-complement into a signed BIGINT.  Raises
+    ValueError below 8×8."""
+    import numpy as _np
+
+    def ahash(px):
+        gray = px.astype(_np.int64).sum(axis=2) // 3
+        h, w = gray.shape
+        bh, bw = h // 8, w // 8
+        if bh == 0 or bw == 0:
+            raise ValueError(f"image {w}x{h} below 8x8")
+        cells = gray[: bh * 8, : bw * 8].reshape(8, bh, 8, bw).mean(axis=(1, 3))
+        val = 0
+        for i, b in enumerate((cells > cells.mean()).flatten()):
+            if b:
+                val |= 1 << i
+        if val >= 1 << 63:  # two's-complement into BIGINT
+            val -= 1 << 64
+        return val
+
+    return ahash
+
+
 def synth_png_blobs(docs: DataFrame) -> DataFrame:
     """Deterministic PNG synthesis per document — a REAL 8-bit
     truecolor PNG (zlib-compressed scanlines) whose per-row filter
@@ -575,6 +604,7 @@ def decode_png_with_ahash(
         "sum_r long, sum_g long, sum_b long, ahash long, err string"
     )
     _, dec = _png_codec()  # nested closure -> cloudpickled by value
+    ahash = _ahash_fn()
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np2
@@ -592,22 +622,7 @@ def decode_png_with_ahash(
                     w, h, px = dec(bytes(payload))
                     px64 = px.astype(np2.int64)
                     sums = px64.sum(axis=(0, 1))
-                    gray = px64.sum(axis=2) // 3
-                    bh, bw = h // 8, w // 8
-                    if bh == 0 or bw == 0:
-                        raise ValueError(f"image {w}x{h} below 8x8")
-                    cells = (
-                        gray[: bh * 8, : bw * 8]
-                        .reshape(8, bh, 8, bw)
-                        .mean(axis=(1, 3))
-                    )
-                    bits = (cells > cells.mean()).flatten()
-                    val = 0
-                    for i, b in enumerate(bits):
-                        if b:
-                            val |= 1 << i
-                    if val >= 1 << 63:  # two's-complement into BIGINT
-                        val -= 1 << 64
+                    val = ahash(px)
                     rows["ok"].append(True)
                     rows["width"].append(w)
                     rows["height"].append(h)
@@ -1010,9 +1025,9 @@ def image_ahash(blobs: DataFrame, *, png_col: str = "png") -> DataFrame:
     Quarantine-don't-crash: corrupt payloads yield ok=False."""
     out_schema = "doc_id long, ok boolean, ahash long, err string"
     _, dec = _png_codec()  # nested closure -> cloudpickled by value
+    ahash = _ahash_fn()
 
     def hash_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np2
         import pandas as pd2
 
         for pdf in batches:
@@ -1020,23 +1035,7 @@ def image_ahash(blobs: DataFrame, *, png_col: str = "png") -> DataFrame:
             for doc_id, payload in zip(pdf["doc_id"], pdf[png_col]):
                 rows["doc_id"].append(doc_id)
                 try:
-                    w, h, px = dec(bytes(payload))
-                    gray = px.astype(np2.int64).sum(axis=2) // 3
-                    bh, bw = h // 8, w // 8
-                    if bh == 0 or bw == 0:
-                        raise ValueError(f"image {w}x{h} below 8x8")
-                    cells = (
-                        gray[: bh * 8, : bw * 8]
-                        .reshape(8, bh, 8, bw)
-                        .mean(axis=(1, 3))
-                    )
-                    bits = (cells > cells.mean()).flatten()
-                    val = 0
-                    for i, b in enumerate(bits):
-                        if b:
-                            val |= 1 << i
-                    if val >= 1 << 63:  # two's-complement into BIGINT
-                        val -= 1 << 64
+                    val = ahash(dec(bytes(payload))[2])
                     rows["ok"].append(True)
                     rows["ahash"].append(val)
                     rows["err"].append(None)
@@ -1058,32 +1057,7 @@ def ahash_near_pairs(
     verify), with the same pigeonhole recall guarantee: hamming ≤
     bands−1 pairs MUST share a band; beyond that recall is approximate
     (measured in the planted test).  Never an all-pairs product."""
-    bits = 64
-    width = bits // bands
-    mask = (1 << width) - 1
     sh = hashes.filter(F.col("ok")).select("doc_id", F.col("ahash").alias("sh"))
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.shiftright(F.col("sh"), b * width)
-            .bitwiseAND(F.lit(mask))
-            .alias("band_val"),
-        )
-        for b in range(bands)
-    ]
-    banded = sh.select(
-        "doc_id", "sh", F.explode(F.array(*band_structs)).alias("bb")
-    ).select("doc_id", "sh", "bb.band", "bb.band_val")
-    a, b = banded.alias("a"), banded.alias("b")
-    ham = F.bit_count(F.col("a.sh").bitwiseXOR(F.col("b.sh")))
-    return (
-        a.join(b, on=["band", "band_val"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            ham.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
+    return banded_hamming_pairs(
+        sh, bits=64, bands=bands, max_hamming=max_hamming
     )

@@ -59,6 +59,109 @@ def _dec(c: F.Column) -> F.Column:
 
 _SQL_VARIANT = _SQL_H60.format(x="CAST(user_id AS VARCHAR)") + " % 2"
 
+# per-user whole-period purchase cents (the Welch / MDE metric frame)
+_SQL_USERS_Y = f"""users AS (
+  SELECT user_id,
+         {_SQL_VARIANT} AS variant,
+         COALESCE(SUM(CASE WHEN event_type = 'purchase'
+                           THEN {_SQL_CENTS} END), 0) AS y
+  FROM events GROUP BY user_id
+)"""
+
+# per-user pre/post purchase cents split at the integer midpoint of the
+# observed date span (the CUPED / DiD / readout-panel metric frame)
+_SQL_PREPOST_USERS = f"""bounds AS (
+  SELECT MIN(CAST(ts AS DATE)) AS mind, MAX(CAST(ts AS DATE)) AS maxd
+  FROM events
+),
+cut AS (SELECT mind + CAST((maxd - mind) // 2 AS INTEGER) AS cutoff
+        FROM bounds),
+users AS (
+  SELECT user_id,
+         {_SQL_VARIANT} AS variant,
+         COALESCE(SUM(CASE WHEN event_type = 'purchase'
+                            AND CAST(ts AS DATE) < cutoff
+                           THEN {_SQL_CENTS} END), 0) AS x,
+         COALESCE(SUM(CASE WHEN event_type = 'purchase'
+                            AND CAST(ts AS DATE) >= cutoff
+                           THEN {_SQL_CENTS} END), 0) AS y
+  FROM events, cut GROUP BY user_id
+)"""
+
+# per-variant user counts and pre/post cent sums over `users`
+_SQL_PREPOST_SUMS = """
+    COUNT(*) FILTER (WHERE variant = 0) AS n_c,
+    COUNT(*) FILTER (WHERE variant = 1) AS n_t,
+    CAST(COALESCE(SUM(x) FILTER (WHERE variant = 0), 0) AS DOUBLE) AS sx_c,
+    CAST(COALESCE(SUM(x) FILTER (WHERE variant = 1), 0) AS DOUBLE) AS sx_t,
+    CAST(COALESCE(SUM(y) FILTER (WHERE variant = 0), 0) AS DOUBLE) AS sy_c,
+    CAST(COALESCE(SUM(y) FILTER (WHERE variant = 1), 0) AS DOUBLE) AS sy_t"""
+
+
+def _sql_welch_sums(y: str) -> str:
+    """SELECT items: per-variant count, exact sum and exact sum of
+    squares of the integer metric ``y`` (the Welch six-moment row)."""
+    sq = f"CAST({y} AS DECIMAL(19,0)) * CAST({y} AS DECIMAL(19,0))"
+    return f"""
+    COUNT(*) FILTER (WHERE variant = 0) AS n_c,
+    COUNT(*) FILTER (WHERE variant = 1) AS n_t,
+    CAST(COALESCE(SUM({y}) FILTER (WHERE variant = 0), 0) AS DOUBLE) AS s_c,
+    CAST(COALESCE(SUM({y}) FILTER (WHERE variant = 1), 0) AS DOUBLE) AS s_t,
+    CAST(COALESCE(SUM({sq})
+                  FILTER (WHERE variant = 0), 0) AS DOUBLE) AS q_c,
+    CAST(COALESCE(SUM({sq})
+                  FILTER (WHERE variant = 1), 0) AS DOUBLE) AS q_t"""
+
+
+def variant_counts() -> list[F.Column]:
+    """``n_c``, ``n_t``: rows per variant."""
+    return [
+        F.count(F.when(F.col("variant") == 0, 1)).alias("n_c"),
+        F.count(F.when(F.col("variant") == 1, 1)).alias("n_t"),
+    ]
+
+
+def variant_sums(c: F.Column, name: str) -> list[F.Column]:
+    """``{name}_c``, ``{name}_t``: per-variant exact sums of ``c``
+    (0 when a variant is empty), cast to double."""
+    return [
+        F.coalesce(F.sum(F.when(F.col("variant") == v, c)), F.lit(0))
+        .cast("double")
+        .alias(f"{name}_{side}")
+        for v, side in ((0, "c"), (1, "t"))
+    ]
+
+
+def welch_sums(frame: DataFrame, y: str, *keys: str) -> DataFrame:
+    """(*keys, n_c, n_t, s_c, s_t, q_c, q_t): the exact per-variant
+    six-moment row of the integer metric ``y`` per ``keys`` group."""
+    yc = F.col(y)
+    return frame.groupBy(*keys).agg(
+        *variant_counts(),
+        *variant_sums(yc, "s"),
+        *variant_sums(_dec(yc) * _dec(yc), "q"),
+    )
+
+
+def welch_v(m: DataFrame, *keys: str) -> DataFrame:
+    """(*keys, n_c, n_t, mc, mt, vc, vt): per-variant means and sample
+    variances from a six-moment row (one double expression each)."""
+    return m.select(
+        *keys,
+        "n_c",
+        "n_t",
+        (F.col("s_c") / F.col("n_c")).alias("mc"),
+        (F.col("s_t") / F.col("n_t")).alias("mt"),
+        (
+            (F.col("q_c") - F.col("s_c") * F.col("s_c") / F.col("n_c"))
+            / (F.col("n_c") - F.lit(1))
+        ).alias("vc"),
+        (
+            (F.col("q_t") - F.col("s_t") * F.col("s_t") / F.col("n_t"))
+            / (F.col("n_t") - F.lit(1))
+        ).alias("vt"),
+    )
+
 # ---------------------------------------------------------------------
 # Shared metric store: the whole batch A/B family reads purchase cents
 # at the (user, day) grain from ONE corpus scan per session — the
@@ -142,23 +245,9 @@ def prepost_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     "eval_ab_welch_ttest",
     tags=("eval", "ab", "ttest", "experiment"),
     oracle=f"""
-WITH users AS (
-  SELECT user_id,
-         {_SQL_VARIANT} AS variant,
-         COALESCE(SUM(CASE WHEN event_type = 'purchase'
-                           THEN {_SQL_CENTS} END), 0) AS y
-  FROM events GROUP BY user_id
-),
+WITH {_SQL_USERS_Y},
 m AS (
-  SELECT
-    COUNT(*) FILTER (WHERE variant = 0) AS n_c,
-    COUNT(*) FILTER (WHERE variant = 1) AS n_t,
-    CAST(COALESCE(SUM(y) FILTER (WHERE variant = 0), 0) AS DOUBLE) AS s_c,
-    CAST(COALESCE(SUM(y) FILTER (WHERE variant = 1), 0) AS DOUBLE) AS s_t,
-    CAST(COALESCE(SUM(CAST(y AS DECIMAL(19,0)) * CAST(y AS DECIMAL(19,0)))
-                  FILTER (WHERE variant = 0), 0) AS DOUBLE) AS q_c,
-    CAST(COALESCE(SUM(CAST(y AS DECIMAL(19,0)) * CAST(y AS DECIMAL(19,0)))
-                  FILTER (WHERE variant = 1), 0) AS DOUBLE) AS q_t
+  SELECT{_sql_welch_sums('y')}
   FROM users
 ),
 v AS (
@@ -194,43 +283,7 @@ def eval_ab_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     The metric frame comes from the session's shared (user, day)
     metric store (:func:`users_total_metric`) — one fact scan serves
     the whole family."""
-    users = users_total_metric(spark, sf_dir)
-    y = F.col("y")
-    is_c, is_t = F.col("variant") == 0, F.col("variant") == 1
-    m = users.agg(
-        F.count(F.when(is_c, 1)).alias("n_c"),
-        F.count(F.when(is_t, 1)).alias("n_t"),
-        F.coalesce(F.sum(F.when(is_c, y)), F.lit(0))
-        .cast("double")
-        .alias("s_c"),
-        F.coalesce(F.sum(F.when(is_t, y)), F.lit(0))
-        .cast("double")
-        .alias("s_t"),
-        F.coalesce(
-            F.sum(F.when(is_c, _dec(y) * _dec(y))), F.lit(0)
-        )
-        .cast("double")
-        .alias("q_c"),
-        F.coalesce(
-            F.sum(F.when(is_t, _dec(y) * _dec(y))), F.lit(0)
-        )
-        .cast("double")
-        .alias("q_t"),
-    )
-    v = m.select(
-        "n_c",
-        "n_t",
-        (F.col("s_c") / F.col("n_c")).alias("mc"),
-        (F.col("s_t") / F.col("n_t")).alias("mt"),
-        (
-            (F.col("q_c") - F.col("s_c") * F.col("s_c") / F.col("n_c"))
-            / (F.col("n_c") - F.lit(1))
-        ).alias("vc"),
-        (
-            (F.col("q_t") - F.col("s_t") * F.col("s_t") / F.col("n_t"))
-            / (F.col("n_t") - F.lit(1))
-        ).alias("vt"),
-    )
+    v = welch_v(welch_sums(users_total_metric(spark, sf_dir), "y"))
     se2 = F.col("vt") / F.col("n_t") + F.col("vc") / F.col("n_c")
     t_stat = F.round((F.col("mt") - F.col("mc")) / F.sqrt(se2), 6)
     return v.select(
@@ -327,23 +380,7 @@ def eval_ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     "eval_ab_cuped_adjust",
     tags=("eval", "ab", "cuped", "variance-reduction"),
     oracle=f"""
-WITH bounds AS (
-  SELECT MIN(CAST(ts AS DATE)) AS mind, MAX(CAST(ts AS DATE)) AS maxd
-  FROM events
-),
-cut AS (SELECT mind + CAST((maxd - mind) // 2 AS INTEGER) AS cutoff
-        FROM bounds),
-users AS (
-  SELECT user_id,
-         {_SQL_VARIANT} AS variant,
-         COALESCE(SUM(CASE WHEN event_type = 'purchase'
-                            AND CAST(ts AS DATE) < cutoff
-                           THEN {_SQL_CENTS} END), 0) AS x,
-         COALESCE(SUM(CASE WHEN event_type = 'purchase'
-                            AND CAST(ts AS DATE) >= cutoff
-                           THEN {_SQL_CENTS} END), 0) AS y
-  FROM events, cut GROUP BY user_id
-),
+WITH {_SQL_PREPOST_USERS},
 pooled AS (
   SELECT COUNT(*) AS n,
          CAST(SUM(x) AS DOUBLE) AS sx,
@@ -447,31 +484,9 @@ def eval_ab_cuped_adjust(spark: SparkSession, sf_dir: str) -> DataFrame:
     "eval_ab_diff_in_diff",
     tags=("eval", "ab", "did", "experiment"),
     oracle=f"""
-WITH bounds AS (
-  SELECT MIN(CAST(ts AS DATE)) AS mind, MAX(CAST(ts AS DATE)) AS maxd
-  FROM events
-),
-cut AS (SELECT mind + CAST((maxd - mind) // 2 AS INTEGER) AS cutoff
-        FROM bounds),
-users AS (
-  SELECT user_id,
-         {_SQL_VARIANT} AS variant,
-         COALESCE(SUM(CASE WHEN event_type = 'purchase'
-                            AND CAST(ts AS DATE) < cutoff
-                           THEN {_SQL_CENTS} END), 0) AS x,
-         COALESCE(SUM(CASE WHEN event_type = 'purchase'
-                            AND CAST(ts AS DATE) >= cutoff
-                           THEN {_SQL_CENTS} END), 0) AS y
-  FROM events, cut GROUP BY user_id
-),
+WITH {_SQL_PREPOST_USERS},
 m AS (
-  SELECT
-    COUNT(*) FILTER (WHERE variant = 0) AS n_c,
-    COUNT(*) FILTER (WHERE variant = 1) AS n_t,
-    CAST(COALESCE(SUM(x) FILTER (WHERE variant = 0), 0) AS DOUBLE) AS sx_c,
-    CAST(COALESCE(SUM(x) FILTER (WHERE variant = 1), 0) AS DOUBLE) AS sx_t,
-    CAST(COALESCE(SUM(y) FILTER (WHERE variant = 0), 0) AS DOUBLE) AS sy_c,
-    CAST(COALESCE(SUM(y) FILTER (WHERE variant = 1), 0) AS DOUBLE) AS sy_t
+  SELECT{_SQL_PREPOST_SUMS}
   FROM users
 )
 SELECT n_c AS n_control, n_t AS n_treatment,
@@ -496,24 +511,10 @@ def eval_ab_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     (:func:`prepost_users`), then a one-row six-sum report; every mean
     is a ratio of an exact BIGINT cents sum to a count, so the 2×2
     panel is bit-stable across engines."""
-    users = prepost_users(spark, sf_dir)
-    is_c, is_t = F.col("variant") == 0, F.col("variant") == 1
-    x, y = F.col("x"), F.col("y")
-    m = users.agg(
-        F.count(F.when(is_c, 1)).alias("n_c"),
-        F.count(F.when(is_t, 1)).alias("n_t"),
-        F.coalesce(F.sum(F.when(is_c, x)), F.lit(0))
-        .cast("double")
-        .alias("sx_c"),
-        F.coalesce(F.sum(F.when(is_t, x)), F.lit(0))
-        .cast("double")
-        .alias("sx_t"),
-        F.coalesce(F.sum(F.when(is_c, y)), F.lit(0))
-        .cast("double")
-        .alias("sy_c"),
-        F.coalesce(F.sum(F.when(is_t, y)), F.lit(0))
-        .cast("double")
-        .alias("sy_t"),
+    m = prepost_users(spark, sf_dir).agg(
+        *variant_counts(),
+        *variant_sums(F.col("x"), "sx"),
+        *variant_sums(F.col("y"), "sy"),
     )
     mx_c = F.col("sx_c") / F.col("n_c")
     mx_t = F.col("sx_t") / F.col("n_t")
@@ -537,23 +538,9 @@ def eval_ab_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     "eval_ab_power_mde",
     tags=("eval", "ab", "power", "experiment"),
     oracle=f"""
-WITH users AS (
-  SELECT user_id,
-         {_SQL_VARIANT} AS variant,
-         COALESCE(SUM(CASE WHEN event_type = 'purchase'
-                           THEN {_SQL_CENTS} END), 0) AS y
-  FROM events GROUP BY user_id
-),
+WITH {_SQL_USERS_Y},
 m AS (
-  SELECT
-    COUNT(*) FILTER (WHERE variant = 0) AS n_c,
-    COUNT(*) FILTER (WHERE variant = 1) AS n_t,
-    CAST(COALESCE(SUM(y) FILTER (WHERE variant = 0), 0) AS DOUBLE) AS s_c,
-    CAST(COALESCE(SUM(y) FILTER (WHERE variant = 1), 0) AS DOUBLE) AS s_t,
-    CAST(COALESCE(SUM(CAST(y AS DECIMAL(19,0)) * CAST(y AS DECIMAL(19,0)))
-                  FILTER (WHERE variant = 0), 0) AS DOUBLE) AS q_c,
-    CAST(COALESCE(SUM(CAST(y AS DECIMAL(19,0)) * CAST(y AS DECIMAL(19,0)))
-                  FILTER (WHERE variant = 1), 0) AS DOUBLE) AS q_t
+  SELECT{_sql_welch_sums('y')}
   FROM users
 ),
 v AS (
@@ -579,38 +566,7 @@ def eval_ab_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: same shared metric-store user grain and one-row
     six-moment report as ``eval_ab_welch_ttest``; SE and MDE are single
     double expressions over exact BIGINT/DECIMAL moments."""
-    users = users_total_metric(spark, sf_dir)
-    y = F.col("y")
-    is_c, is_t = F.col("variant") == 0, F.col("variant") == 1
-    m = users.agg(
-        F.count(F.when(is_c, 1)).alias("n_c"),
-        F.count(F.when(is_t, 1)).alias("n_t"),
-        F.coalesce(F.sum(F.when(is_c, y)), F.lit(0))
-        .cast("double")
-        .alias("s_c"),
-        F.coalesce(F.sum(F.when(is_t, y)), F.lit(0))
-        .cast("double")
-        .alias("s_t"),
-        F.coalesce(F.sum(F.when(is_c, _dec(y) * _dec(y))), F.lit(0))
-        .cast("double")
-        .alias("q_c"),
-        F.coalesce(F.sum(F.when(is_t, _dec(y) * _dec(y))), F.lit(0))
-        .cast("double")
-        .alias("q_t"),
-    )
-    v = m.select(
-        "n_c",
-        "n_t",
-        (F.col("s_c") / F.col("n_c")).alias("mc"),
-        (
-            (F.col("q_c") - F.col("s_c") * F.col("s_c") / F.col("n_c"))
-            / (F.col("n_c") - F.lit(1))
-        ).alias("vc"),
-        (
-            (F.col("q_t") - F.col("s_t") * F.col("s_t") / F.col("n_t"))
-            / (F.col("n_t") - F.lit(1))
-        ).alias("vt"),
-    )
+    v = welch_v(welch_sums(users_total_metric(spark, sf_dir), "y"))
     se = F.sqrt(F.col("vc") / F.col("n_c") + F.col("vt") / F.col("n_t"))
     return v.select(
         F.col("n_c").alias("n_control"),

@@ -18,11 +18,20 @@ from ..sources.tables import load_table
 from ..streaming.guardrails import srm_windowed
 from .ab_testing import (
     _SQL_CENTS,
+    _SQL_PREPOST_SUMS,
+    _SQL_PREPOST_USERS,
     _SQL_VARIANT,
+    _cents,
+    _dec,
+    _sql_welch_sums,
     _variant,
     prepost_users,
     user_day_purchases,
     users_total_metric,
+    variant_counts,
+    variant_sums,
+    welch_sums,
+    welch_v,
 )
 from .registry import register
 
@@ -260,31 +269,9 @@ def eval_ab_proportion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     "eval_ab_readout_panel",
     tags=("eval", "ab", "experiment", "composition"),
     oracle=f"""
-WITH bounds AS (
-  SELECT MIN(CAST(ts AS DATE)) AS mind, MAX(CAST(ts AS DATE)) AS maxd
-  FROM events
-),
-cut AS (SELECT mind + CAST((maxd - mind) // 2 AS INTEGER) AS cutoff
-        FROM bounds),
-users AS (
-  SELECT user_id,
-         {_SQL_VARIANT} AS variant,
-         COALESCE(SUM(CASE WHEN event_type = 'purchase'
-                            AND CAST(ts AS DATE) < cutoff
-                           THEN {_SQL_CENTS} END), 0) AS x,
-         COALESCE(SUM(CASE WHEN event_type = 'purchase'
-                            AND CAST(ts AS DATE) >= cutoff
-                           THEN {_SQL_CENTS} END), 0) AS y
-  FROM events, cut GROUP BY user_id
-),
+WITH {_SQL_PREPOST_USERS},
 m AS (
-  SELECT
-    COUNT(*) FILTER (WHERE variant = 0) AS n_c,
-    COUNT(*) FILTER (WHERE variant = 1) AS n_t,
-    CAST(COALESCE(SUM(x) FILTER (WHERE variant = 0), 0) AS DOUBLE) AS sx_c,
-    CAST(COALESCE(SUM(x) FILTER (WHERE variant = 1), 0) AS DOUBLE) AS sx_t,
-    CAST(COALESCE(SUM(y) FILTER (WHERE variant = 0), 0) AS DOUBLE) AS sy_c,
-    CAST(COALESCE(SUM(y) FILTER (WHERE variant = 1), 0) AS DOUBLE) AS sy_t,
+  SELECT{_SQL_PREPOST_SUMS},
     CAST(COALESCE(SUM(CAST(y AS DECIMAL(19,0)) * CAST(y AS DECIMAL(19,0)))
                   FILTER (WHERE variant = 0), 0) AS DOUBLE) AS qy_c,
     CAST(COALESCE(SUM(CAST(y AS DECIMAL(19,0)) * CAST(y AS DECIMAL(19,0)))
@@ -344,32 +331,12 @@ def eval_ab_readout_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     Welch, CUPED and DiD all fold into expressions over the same exact
     BIGINT/DECIMAL moments (the cheapest possible composition: adding
     readouts costs zero extra passes over the fact table)."""
-    users = prepost_users(spark, sf_dir)
-    from .ab_testing import _dec
-
     x, y = F.col("x"), F.col("y")
-    is_c, is_t = F.col("variant") == 0, F.col("variant") == 1
-    m = users.agg(
-        F.count(F.when(is_c, 1)).alias("n_c"),
-        F.count(F.when(is_t, 1)).alias("n_t"),
-        F.coalesce(F.sum(F.when(is_c, x)), F.lit(0))
-        .cast("double")
-        .alias("sx_c"),
-        F.coalesce(F.sum(F.when(is_t, x)), F.lit(0))
-        .cast("double")
-        .alias("sx_t"),
-        F.coalesce(F.sum(F.when(is_c, y)), F.lit(0))
-        .cast("double")
-        .alias("sy_c"),
-        F.coalesce(F.sum(F.when(is_t, y)), F.lit(0))
-        .cast("double")
-        .alias("sy_t"),
-        F.coalesce(F.sum(F.when(is_c, _dec(y) * _dec(y))), F.lit(0))
-        .cast("double")
-        .alias("qy_c"),
-        F.coalesce(F.sum(F.when(is_t, _dec(y) * _dec(y))), F.lit(0))
-        .cast("double")
-        .alias("qy_t"),
+    m = prepost_users(spark, sf_dir).agg(
+        *variant_counts(),
+        *variant_sums(x, "sx"),
+        *variant_sums(y, "sy"),
+        *variant_sums(_dec(y) * _dec(y), "qy"),
         F.sum(_dec(x) * _dec(x)).cast("double").alias("sxx"),
         F.sum(_dec(x) * _dec(y)).cast("double").alias("sxy"),
     )
@@ -507,48 +474,12 @@ def _panel_v(spark: SparkSession, sf_dir: str) -> DataFrame:
         "variant",
         F.coalesce(F.col("k"), F.lit(0)).alias("k"),
     )
-    from .ab_testing import _dec
-
-    k = F.col("k")
-    is_c, is_t = F.col("variant") == 0, F.col("variant") == 1
-    m = metric.groupBy("event_type").agg(
-        F.count(F.when(is_c, 1)).alias("n_c"),
-        F.count(F.when(is_t, 1)).alias("n_t"),
-        F.coalesce(F.sum(F.when(is_c, k)), F.lit(0))
-        .cast("double")
-        .alias("s_c"),
-        F.coalesce(F.sum(F.when(is_t, k)), F.lit(0))
-        .cast("double")
-        .alias("s_t"),
-        F.coalesce(F.sum(F.when(is_c, _dec(k) * _dec(k))), F.lit(0))
-        .cast("double")
-        .alias("q_c"),
-        F.coalesce(F.sum(F.when(is_t, _dec(k) * _dec(k))), F.lit(0))
-        .cast("double")
-        .alias("q_t"),
-    )
-    return m.select(
-        "event_type",
-        "n_c",
-        "n_t",
-        (F.col("s_c") / F.col("n_c")).alias("mc"),
-        (F.col("s_t") / F.col("n_t")).alias("mt"),
-        (
-            (F.col("q_c") - F.col("s_c") * F.col("s_c") / F.col("n_c"))
-            / (F.col("n_c") - F.lit(1))
-        ).alias("vc"),
-        (
-            (F.col("q_t") - F.col("s_t") * F.col("s_t") / F.col("n_t"))
-            / (F.col("n_t") - F.lit(1))
-        ).alias("vt"),
-    )
+    return welch_v(welch_sums(metric, "k", "event_type"), "event_type")
 
 
-@register(
-    "eval_ab_metric_panel",
-    tags=("eval", "ab", "guardrails", "multiple-testing"),
-    oracle=f"""
-WITH types AS (SELECT DISTINCT event_type FROM events),
+# the per-event-type metric-panel moments chain (up to `v`)
+_SQL_PANEL_V = f"""
+types AS (SELECT DISTINCT event_type FROM events),
 users AS (SELECT DISTINCT user_id FROM events),
 grid AS (
   SELECT u.user_id, t.event_type,
@@ -566,15 +497,7 @@ metric AS (
     ON g.user_id = c.user_id AND g.event_type = c.event_type
 ),
 m AS (
-  SELECT event_type,
-    COUNT(*) FILTER (WHERE variant = 0) AS n_c,
-    COUNT(*) FILTER (WHERE variant = 1) AS n_t,
-    CAST(COALESCE(SUM(k) FILTER (WHERE variant = 0), 0) AS DOUBLE) AS s_c,
-    CAST(COALESCE(SUM(k) FILTER (WHERE variant = 1), 0) AS DOUBLE) AS s_t,
-    CAST(COALESCE(SUM(CAST(k AS DECIMAL(19,0)) * CAST(k AS DECIMAL(19,0)))
-                  FILTER (WHERE variant = 0), 0) AS DOUBLE) AS q_c,
-    CAST(COALESCE(SUM(CAST(k AS DECIMAL(19,0)) * CAST(k AS DECIMAL(19,0)))
-                  FILTER (WHERE variant = 1), 0) AS DOUBLE) AS q_t
+  SELECT event_type,{_sql_welch_sums('k')}
   FROM metric GROUP BY event_type
 ),
 v AS (
@@ -583,7 +506,14 @@ v AS (
          (q_c - s_c * s_c / n_c) / (n_c - 1) AS vc,
          (q_t - s_t * s_t / n_t) / (n_t - 1) AS vt
   FROM m
-),
+)"""
+
+
+@register(
+    "eval_ab_metric_panel",
+    tags=("eval", "ab", "guardrails", "multiple-testing"),
+    oracle=f"""
+WITH {_SQL_PANEL_V},
 mm AS (SELECT COUNT(*) AS n_metrics FROM v)
 SELECT event_type,
        n_c AS n_control, n_t AS n_treatment,
@@ -644,11 +574,9 @@ def eval_ab_metric_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "eval_ab_cumulative_tstat",
-    tags=("eval", "ab", "sequential", "window"),
-    oracle=f"""
-WITH ud AS (
+# the daily-cumulative-moments CTE chain shared by the sequential readouts
+_SQL_DAILY_MOMENTS = f"""
+ud AS (
   SELECT user_id,
          {_SQL_VARIANT} AS variant,
          CAST(ts AS DATE) AS d,
@@ -713,7 +641,14 @@ v AS (
          (q_c - s_c * s_c / n_c) / (n_c - 1) AS vc,
          (q_t - s_t * s_t / n_t) / (n_t - 1) AS vt
   FROM wide, n
-)
+)"""
+
+
+@register(
+    "eval_ab_cumulative_tstat",
+    tags=("eval", "ab", "sequential", "window"),
+    oracle=f"""
+WITH {_SQL_DAILY_MOMENTS}
 SELECT d,
        ROUND(mc / 100, 6) AS mean_control,
        ROUND(mt / 100, 6) AS mean_treatment,
@@ -782,7 +717,6 @@ def _daily_cum_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _daily_cum_moments_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     from pyspark.sql import Window
-    from .ab_testing import _cents, _dec
 
     ud = ev.groupBy(
         "user_id", F.col("ts").cast("date").alias("d")
@@ -831,14 +765,8 @@ def _daily_cum_moments_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("sd").over(wv).cast("bigint").alias("s_cum"),
         F.sum("sq").over(wv).cast("double").alias("q_cum"),
     )
-    n = (
-        ud.select("user_id")
-        .distinct()
-        .withColumn("variant", _variant())
-        .agg(
-            F.count(F.when(F.col("variant") == 0, 1)).alias("n_c"),
-            F.count(F.when(F.col("variant") == 1, 1)).alias("n_t"),
-        )
+    n = ud.select("user_id").distinct().withColumn("variant", _variant()).agg(
+        *variant_counts()
     )
     wide = cum_grid.groupBy("d").agg(
         F.max(F.when(F.col("variant") == 0, F.col("s_cum")))
@@ -850,22 +778,7 @@ def _daily_cum_moments_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(F.when(F.col("variant") == 0, F.col("q_cum"))).alias("q_c"),
         F.max(F.when(F.col("variant") == 1, F.col("q_cum"))).alias("q_t"),
     )
-    v = wide.crossJoin(F.broadcast(n)).select(
-        "d",
-        "n_c",
-        "n_t",
-        (F.col("s_c") / F.col("n_c")).alias("mc"),
-        (F.col("s_t") / F.col("n_t")).alias("mt"),
-        (
-            (F.col("q_c") - F.col("s_c") * F.col("s_c") / F.col("n_c"))
-            / (F.col("n_c") - F.lit(1))
-        ).alias("vc"),
-        (
-            (F.col("q_t") - F.col("s_t") * F.col("s_t") / F.col("n_t"))
-            / (F.col("n_t") - F.lit(1))
-        ).alias("vt"),
-    )
-    return v
+    return welch_v(wide.crossJoin(F.broadcast(n)), "d")
 
 
 # ---------------------------------------------------------------------
@@ -879,76 +792,6 @@ def _daily_cum_moments_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 # metric), a tuning literal by construction, not data-derived.
 _MSPRT_TAU2 = 100.0
 _MSPRT_ALPHA = 0.05
-
-# the shared daily-cumulative-moments CTE chain (identical to the
-# eval_ab_cumulative_tstat oracle up to the `v` relation)
-_SQL_DAILY_MOMENTS = f"""
-ud AS (
-  SELECT user_id,
-         {_SQL_VARIANT} AS variant,
-         CAST(ts AS DATE) AS d,
-         COALESCE(SUM(CASE WHEN event_type = 'purchase'
-                           THEN {_SQL_CENTS} END), 0) AS delta
-  FROM events GROUP BY user_id, CAST(ts AS DATE)
-),
-cum0 AS (
-  SELECT user_id, variant, d, delta,
-         CAST(SUM(delta) OVER (PARTITION BY user_id ORDER BY d)
-              AS BIGINT) AS cum
-  FROM ud
-),
-cums AS (
-  SELECT variant, d, delta, cum,
-         CAST(COALESCE(LAG(cum, 1)
-              OVER (PARTITION BY user_id ORDER BY d), 0) AS BIGINT)
-           AS lagcum
-  FROM cum0
-),
-daily AS (
-  SELECT variant, d,
-         CAST(SUM(delta) AS BIGINT) AS sd,
-         SUM(CAST(cum AS DECIMAL(19,0)) * CAST(cum AS DECIMAL(19,0))
-             - CAST(lagcum AS DECIMAL(19,0)) * CAST(lagcum AS DECIMAL(19,0)))
-           AS sq
-  FROM cums GROUP BY variant, d
-),
-spine AS (SELECT DISTINCT d FROM ud),
-variants AS (SELECT 0 AS variant UNION ALL SELECT 1),
-grid AS (
-  SELECT s.d, v.variant, COALESCE(dl.sd, 0) AS sd,
-         COALESCE(dl.sq, 0) AS sq
-  FROM spine s CROSS JOIN variants v
-  LEFT JOIN daily dl ON dl.d = s.d AND dl.variant = v.variant
-),
-cum_grid AS (
-  SELECT d, variant,
-         CAST(SUM(sd) OVER (PARTITION BY variant ORDER BY d) AS BIGINT)
-           AS s_cum,
-         CAST(SUM(sq) OVER (PARTITION BY variant ORDER BY d) AS DOUBLE)
-           AS q_cum
-  FROM grid
-),
-n AS (
-  SELECT
-    COUNT(*) FILTER (WHERE variant = 0) AS n_c,
-    COUNT(*) FILTER (WHERE variant = 1) AS n_t
-  FROM (SELECT DISTINCT user_id, {_SQL_VARIANT} AS variant FROM events)
-),
-wide AS (
-  SELECT d,
-         CAST(MAX(CASE WHEN variant = 0 THEN s_cum END) AS DOUBLE) AS s_c,
-         CAST(MAX(CASE WHEN variant = 1 THEN s_cum END) AS DOUBLE) AS s_t,
-         MAX(CASE WHEN variant = 0 THEN q_cum END) AS q_c,
-         MAX(CASE WHEN variant = 1 THEN q_cum END) AS q_t
-  FROM cum_grid GROUP BY d
-),
-v AS (
-  SELECT d, n_c, n_t,
-         s_c / n_c AS mc, s_t / n_t AS mt,
-         (q_c - s_c * s_c / n_c) / (n_c - 1) AS vc,
-         (q_t - s_t * s_t / n_t) / (n_t - 1) AS vt
-  FROM wide, n
-)"""
 
 
 @register(
@@ -1232,46 +1075,6 @@ def _sql_phi_cdf(z: str) -> str:
     tail = f"((EXP(-(ABS({z}) * ABS({z})) / 2.0) / {_SQRT_2PI}) * {poly})"
     return f"(CASE WHEN {z} >= 0.0 THEN 1.0 - {tail} ELSE {tail} END)"
 
-
-# the metric-panel moments chain, shared verbatim by the BH-FDR oracle
-# (identical text to the eval_ab_metric_panel oracle up to `v`)
-_SQL_PANEL_V = f"""
-types AS (SELECT DISTINCT event_type FROM events),
-users AS (SELECT DISTINCT user_id FROM events),
-grid AS (
-  SELECT u.user_id, t.event_type,
-         {_SQL_VARIANT} AS variant
-  FROM users u CROSS JOIN types t
-),
-cnt AS (
-  SELECT user_id, event_type, COUNT(*) AS k
-  FROM events GROUP BY user_id, event_type
-),
-metric AS (
-  SELECT g.event_type, g.variant,
-         COALESCE(c.k, 0) AS k
-  FROM grid g LEFT JOIN cnt c
-    ON g.user_id = c.user_id AND g.event_type = c.event_type
-),
-m AS (
-  SELECT event_type,
-    COUNT(*) FILTER (WHERE variant = 0) AS n_c,
-    COUNT(*) FILTER (WHERE variant = 1) AS n_t,
-    CAST(COALESCE(SUM(k) FILTER (WHERE variant = 0), 0) AS DOUBLE) AS s_c,
-    CAST(COALESCE(SUM(k) FILTER (WHERE variant = 1), 0) AS DOUBLE) AS s_t,
-    CAST(COALESCE(SUM(CAST(k AS DECIMAL(19,0)) * CAST(k AS DECIMAL(19,0)))
-                  FILTER (WHERE variant = 0), 0) AS DOUBLE) AS q_c,
-    CAST(COALESCE(SUM(CAST(k AS DECIMAL(19,0)) * CAST(k AS DECIMAL(19,0)))
-                  FILTER (WHERE variant = 1), 0) AS DOUBLE) AS q_t
-  FROM metric GROUP BY event_type
-),
-v AS (
-  SELECT event_type, n_c, n_t,
-         s_c / n_c AS mc, s_t / n_t AS mt,
-         (q_c - s_c * s_c / n_c) / (n_c - 1) AS vc,
-         (q_t - s_t * s_t / n_t) / (n_t - 1) AS vt
-  FROM m
-)"""
 
 _BH_Q = 0.05  # FDR level
 
@@ -1693,15 +1496,7 @@ dec AS (
   FROM rk
 ),
 m AS (
-  SELECT decile,
-    COUNT(*) FILTER (WHERE variant = 0) AS n_c,
-    COUNT(*) FILTER (WHERE variant = 1) AS n_t,
-    CAST(COALESCE(SUM(y) FILTER (WHERE variant = 0), 0) AS DOUBLE) AS s_c,
-    CAST(COALESCE(SUM(y) FILTER (WHERE variant = 1), 0) AS DOUBLE) AS s_t,
-    CAST(COALESCE(SUM(CAST(y AS DECIMAL(19,0)) * CAST(y AS DECIMAL(19,0)))
-                  FILTER (WHERE variant = 0), 0) AS DOUBLE) AS q_c,
-    CAST(COALESCE(SUM(CAST(y AS DECIMAL(19,0)) * CAST(y AS DECIMAL(19,0)))
-                  FILTER (WHERE variant = 1), 0) AS DOUBLE) AS q_t
+  SELECT decile,{_sql_welch_sums('y')}
   FROM dec GROUP BY decile
 ),
 v AS (
@@ -1753,10 +1548,6 @@ def eval_ab_hte_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     the win_ntile_deciles discipline, never a single-partition
     window); one 10-group moment agg with map-side partials."""
     ev = load_table(spark, sf_dir, "events")
-    from pyspark.sql.window import Window
-
-    from .ab_testing import _cents, _dec
-
     u = ev.groupBy("user_id").agg(
         F.count(F.when(F.col("ts") < F.lit(_HTE_CUT).cast("timestamp"), 1))
         .alias("n_pre"),
@@ -1785,24 +1576,7 @@ def eval_ab_hte_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         "variant",
         "y",
     )
-    y = F.col("y")
-    is_c, is_t = F.col("variant") == 0, F.col("variant") == 1
-    m = dec.groupBy("decile").agg(
-        F.count(F.when(is_c, 1)).alias("n_c"),
-        F.count(F.when(is_t, 1)).alias("n_t"),
-        F.coalesce(F.sum(F.when(is_c, y)), F.lit(0))
-        .cast("double")
-        .alias("s_c"),
-        F.coalesce(F.sum(F.when(is_t, y)), F.lit(0))
-        .cast("double")
-        .alias("s_t"),
-        F.coalesce(F.sum(F.when(is_c, _dec(y) * _dec(y))), F.lit(0))
-        .cast("double")
-        .alias("q_c"),
-        F.coalesce(F.sum(F.when(is_t, _dec(y) * _dec(y))), F.lit(0))
-        .cast("double")
-        .alias("q_t"),
-    )
+    m = welch_sums(dec, "y", "decile")
     v = m.select(
         "decile",
         "n_c",

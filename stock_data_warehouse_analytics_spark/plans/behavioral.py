@@ -427,6 +427,76 @@ def join_interval_overlap_bucketed(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
+# purchase x same-user click pairs, the click at or before the purchase;
+# each attribution rule bounds ``age_us`` (purchase minus click, in µs)
+_SQL_CLICK_PAIRS = """p AS (
+  SELECT event_id AS pid, user_id, epoch_us(ts) AS pu, value
+  FROM events WHERE event_type = 'purchase'
+),
+c AS (
+  SELECT event_id AS cid, user_id, epoch_us(ts) AS cu
+  FROM events WHERE event_type = 'click'
+),
+pairs AS (
+  SELECT pid, cid, value, cu, pu - cu AS age_us
+  FROM p JOIN c USING (user_id)
+  WHERE cu <= pu
+)"""
+
+
+def _sql_ranked_touches(within: str) -> str:
+    """CTE ``ranked(pid, cid, value, rn, k)``: the pairs whose age
+    satisfies ``age_us {within}``, numbered per purchase in click order
+    (rn, ties by click id) with the purchase's touch count k."""
+    return f"""ranked AS (
+  SELECT pid, cid, value,
+         ROW_NUMBER() OVER (PARTITION BY pid ORDER BY cu, cid) AS rn,
+         COUNT(*) OVER (PARTITION BY pid) AS k
+  FROM pairs WHERE age_us {within}
+)"""
+
+
+def click_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(pid, cid, value, cu, age_us): the Spark mirror of
+    ``_SQL_CLICK_PAIRS`` — a user-keyed equi-join (never a cartesian;
+    per-user activity bounds the fan-out), times in integer µs.  The
+    caller's ``age_us`` bound is pushed into the join condition."""
+    e = load_table(spark, sf_dir, "events")
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
+    p = e.filter(F.col("event_type") == "purchase").select(
+        F.col("event_id").alias("pid"), "user_id", us.alias("pu"), "value"
+    )
+    c = e.filter(F.col("event_type") == "click").select(
+        F.col("event_id").alias("cid"), "user_id", us.alias("cu")
+    )
+    return (
+        p.join(c, "user_id")
+        .filter(F.col("cu") <= F.col("pu"))
+        .select(
+            "pid",
+            "cid",
+            "value",
+            "cu",
+            (F.col("pu") - F.col("cu")).alias("age_us"),
+        )
+    )
+
+
+def ranked_touches(pairs: DataFrame) -> DataFrame:
+    """(pid, cid, value, rn, k): the Spark mirror of
+    :func:`_sql_ranked_touches` over already-bounded pairs — two
+    windows partitioned by purchase, no global sort."""
+    return pairs.select(
+        "pid",
+        "cid",
+        "value",
+        F.row_number()
+        .over(Window.partitionBy("pid").orderBy("cu", "cid"))
+        .alias("rn"),
+        F.count(F.lit(1)).over(Window.partitionBy("pid")).alias("k"),
+    )
+
+
 _MT_WINDOW_US = 7 * 24 * 3600 * 1_000_000  # 7-day attribution window
 
 
@@ -434,26 +504,10 @@ _MT_WINDOW_US = 7 * 24 * 3600 * 1_000_000  # 7-day attribution window
     "attribution_multi_touch",
     tags=("join", "behavioral", "attribution", "window"),
     oracle=f"""
-WITH purchases AS (
-  SELECT event_id AS purchase_id, user_id, ts AS pts, value
-  FROM events WHERE event_type = 'purchase'
-),
-clicks AS (
-  SELECT event_id AS click_id, user_id, ts AS cts
-  FROM events WHERE event_type = 'click'
-),
-touched AS (
-  SELECT p.purchase_id, p.value, c.click_id, c.cts,
-         ROW_NUMBER() OVER w_asc AS rn,
-         COUNT(*) OVER (PARTITION BY p.purchase_id) AS k
-  FROM purchases p JOIN clicks c
-    ON p.user_id = c.user_id
-   AND c.cts <= p.pts
-   AND epoch_us(p.pts) - epoch_us(c.cts) <= {_MT_WINDOW_US}
-  WINDOW w_asc AS (PARTITION BY p.purchase_id ORDER BY c.cts, c.click_id)
-),
+WITH {_SQL_CLICK_PAIRS},
+{_sql_ranked_touches(f"<= {_MT_WINDOW_US}")},
 credited AS (
-  SELECT purchase_id, value, click_id, k,
+  SELECT pid, value, cid, k,
          CASE
            WHEN k = 1 THEN 1000
            WHEN k = 2 THEN 500
@@ -466,7 +520,7 @@ credited AS (
            WHEN k = 1 THEN 'only'
            ELSE 'middle'
          END AS position_class
-  FROM touched
+  FROM ranked
 )
 SELECT position_class,
        COUNT(*) AS n_touches,
@@ -487,36 +541,8 @@ def attribution_multi_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     residual (never a cartesian), then two windows partitioned by
     purchase — the join output is each user's clicks×purchases within
     the window, bounded by per-user activity."""
-    e = load_table(spark, sf_dir, "events")
-    purchases = e.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id").alias("p_user"),
-        F.col("ts").alias("pts"),
-        "value",
-    )
-    clicks = e.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"),
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("cts"),
-    )
-    gap_us = F.unix_micros(F.col("pts").cast("timestamp")) - F.unix_micros(
-        F.col("cts").cast("timestamp")
-    )
-    touched = purchases.join(
-        clicks,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("cts") <= F.col("pts"))
-        & (gap_us <= _MT_WINDOW_US),
-    )
-    w_asc = Window.partitionBy("purchase_id").orderBy("cts", "click_id")
-    w_all = Window.partitionBy("purchase_id")
-    ranked = touched.select(
-        "purchase_id",
-        "value",
-        "click_id",
-        F.row_number().over(w_asc).alias("rn"),
-        F.count(F.lit(1)).over(w_all).alias("k"),
-    )
+    pairs = click_pairs(spark, sf_dir)
+    ranked = ranked_touches(pairs.filter(F.col("age_us") <= _MT_WINDOW_US))
     credit = (
         F.when(F.col("k") == 1, 1000)
         .when(F.col("k") == 2, 500)
@@ -531,7 +557,6 @@ def attribution_multi_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         ranked.select(
-            "purchase_id",
             "value",
             credit.alias("credit_milli"),
             pos.alias("position_class"),

@@ -259,145 +259,10 @@ def events_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
 # ------------------------------------------------ growth accounting
 
 
-@register(
-    "behavior_growth_accounting",
-    tags=("behavioral", "growth", "retention", "dau"),
-    oracle="""
-WITH active AS (
-  SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM events
-),
-seq AS (
-  SELECT user_id, d,
-         LAG(d) OVER (PARTITION BY user_id ORDER BY d) AS prev_d,
-         LEAD(d) OVER (PARTITION BY user_id ORDER BY d) AS next_d
-  FROM active
-),
-mx AS (SELECT MAX(d) AS max_d FROM active),
-classified AS (
-  SELECT d,
-         CASE WHEN prev_d IS NULL THEN 'new'
-              WHEN d - prev_d = 1 THEN 'retained'
-              ELSE 'resurrected' END AS kind
-  FROM seq
-),
-dau AS (
-  SELECT d,
-         CAST(COUNT(*) AS BIGINT) AS dau,
-         CAST(COUNT(*) FILTER (WHERE kind = 'new') AS BIGINT) AS n_new,
-         CAST(COUNT(*) FILTER (WHERE kind = 'retained') AS BIGINT)
-           AS n_retained,
-         CAST(COUNT(*) FILTER (WHERE kind = 'resurrected') AS BIGINT)
-           AS n_resurrected
-  FROM classified GROUP BY d
-),
-churn AS (
-  SELECT d + 1 AS d, CAST(COUNT(*) AS BIGINT) AS n_churned
-  FROM seq, mx
-  WHERE (next_d IS NULL OR next_d > d + 1) AND d + 1 <= mx.max_d
-  GROUP BY d + 1
-)
-SELECT dau.d, dau.dau, dau.n_new, dau.n_retained, dau.n_resurrected,
-       COALESCE(ch.n_churned, 0) AS n_churned,
-       ROUND(CAST(dau.n_new + dau.n_resurrected AS DOUBLE)
-             / NULLIF(COALESCE(ch.n_churned, 0), 0), 6) AS quick_ratio
-FROM dau LEFT JOIN churn ch ON ch.d = dau.d
-ORDER BY dau.d
-""",
-)
-def behavior_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DAILY GROWTH ACCOUNTING — the product-analytics identity
-    DAU(t) = new(t) + retained(t) + resurrected(t), with churned(t) =
-    yesterday's actives who did not return, and the Social-Capital
-    QUICK RATIO (new + resurrected) / churned that summarizes whether
-    the user base is filling faster than it drains.  The daily
-    companion to the static ``events_user_lifecycle`` snapshot and the
-    ``retention_cohorts`` triangle.
-
-    Semantics: a user is NEW on their first-ever active day, RETAINED
-    when active the previous calendar day too, RESURRECTED when
-    returning after a gap; churn is attributed to the day AFTER the
-    last active day (censored at the corpus's final day — no user can
-    churn past the observation window).
-
-    Exactness: everything is integer day arithmetic and counts; the
-    quick ratio is one round-6 division with a NULLIF(0) guard (NULL
-    on churn-free days, identically in both engines).
-
-    Scale shape: one distinct (user, day) projection (map-side
-    partial), one user-partitioned window pass for lag/lead, two
-    day-grain aggregates joined at calendar grain — no global sort,
-    no single partition, fact scanned once."""
-    ev = load_table(spark, sf_dir, "events")
-    active = ev.select(
-        "user_id", F.col("ts").cast("date").alias("d")
-    ).distinct()
-    w = Window.partitionBy("user_id").orderBy("d")
-    seq = active.select(
-        "user_id",
-        "d",
-        F.lag("d").over(w).alias("prev_d"),
-        F.lead("d").over(w).alias("next_d"),
-    )
-    kind = (
-        F.when(F.col("prev_d").isNull(), "new")
-        .when(F.datediff(F.col("d"), F.col("prev_d")) == 1, "retained")
-        .otherwise("resurrected")
-    )
-    dau = (
-        seq.select("d", kind.alias("kind"))
-        .groupBy("d")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("dau"),
-            F.count(F.when(F.col("kind") == "new", 1))
-            .cast("long")
-            .alias("n_new"),
-            F.count(F.when(F.col("kind") == "retained", 1))
-            .cast("long")
-            .alias("n_retained"),
-            F.count(F.when(F.col("kind") == "resurrected", 1))
-            .cast("long")
-            .alias("n_resurrected"),
-        )
-    )
-    mx = active.agg(F.max("d").alias("max_d"))
-    churn = (
-        seq.crossJoin(F.broadcast(mx))
-        .filter(
-            (F.col("next_d").isNull() | (F.col("next_d") > F.date_add("d", 1)))
-            & (F.date_add("d", 1) <= F.col("max_d"))
-        )
-        .groupBy(F.date_add("d", 1).alias("d"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_churned"))
-    )
-    return (
-        dau.join(churn, "d", "left")
-        .select(
-            "d",
-            "dau",
-            "n_new",
-            "n_retained",
-            "n_resurrected",
-            F.coalesce(F.col("n_churned"), F.lit(0)).alias("n_churned"),
-            F.round(
-                (F.col("n_new") + F.col("n_resurrected")).cast("double")
-                / F.nullif(
-                    F.coalesce(F.col("n_churned"), F.lit(0)), F.lit(0)
-                ),
-                6,
-            ).alias("quick_ratio"),
-        )
-        .orderBy("d")
-    )
-
-
-# --------------------------------------- WAU / MAU growth accounting
-
-# The weekly/monthly grains of behavior_growth_accounting (r7 verdict
-# action #5), on INTEGER period indexes so every comparison is integer
+# The daily/weekly/monthly grains of growth accounting, on INTEGER period indexes so every comparison is integer
 # arithmetic in both engines (no cross-engine interval/date_trunc
 # semantics in the hot path): weeks index from Monday 1970-01-05 —
 # ISO-week-aligned like date_trunc('week') — months as a year*12
@@ -438,13 +303,13 @@ churn AS (
   WHERE (next_pi IS NULL OR next_pi > pi + 1) AND pi + 1 <= mx.max_pi
   GROUP BY pi + 1
 )
-SELECT {start} AS period_start,
+SELECT {start} AS {key},
        au.{act}, au.n_new, au.n_retained, au.n_resurrected,
        COALESCE(ch.n_churned, 0) AS n_churned,
        ROUND(CAST(au.n_new + au.n_resurrected AS DOUBLE)
              / NULLIF(COALESCE(ch.n_churned, 0), 0), 6) AS quick_ratio
 FROM au LEFT JOIN churn ch ON ch.pi = au.pi
-ORDER BY period_start
+ORDER BY {key}
 """
 
 
@@ -453,14 +318,13 @@ def _growth_accounting_core(
 ) -> DataFrame:
     """new/retained/resurrected/churned/quick-ratio over a distinct
     (user_id, pi) activity frame with an INTEGER period index ``pi`` —
-    the grain-free core of ``behavior_growth_accounting`` (whose
-    day-grain semantics, including churn censored at the corpus's
-    final period, are preserved verbatim: retained ⇔ active in period
-    pi−1, churn attributed to the period AFTER the last active one).
+    the grain-free core of the growth-accounting queries: retained ⇔
+    active in period pi−1, churn attributed to the period AFTER the
+    last active one, censored at the corpus's final period.
 
-    Scale shape: identical to the daily query — one distinct
-    projection (map-side partial), one user-partitioned window pass,
-    two period-grain aggregates joined at period grain."""
+    Scale shape: one distinct projection (map-side partial), one
+    user-partitioned window pass, two period-grain aggregates joined
+    at period grain — no global sort, no single partition."""
     w = Window.partitionBy("user_id").orderBy("pi")
     seq = active.select(
         "user_id",
@@ -518,11 +382,64 @@ _WK_EPOCH = "1970-01-05"  # a Monday: week index is ISO-week-aligned
 
 
 @register(
+    "behavior_growth_accounting",
+    tags=("behavioral", "growth", "retention", "dau"),
+    oracle=_GROWTH_ORACLE.format(
+        idx=f"d - DATE '{_WK_EPOCH}'",
+        act="dau",
+        key="d",
+        start=f"DATE '{_WK_EPOCH}' + CAST(au.pi AS INTEGER)",
+    ),
+)
+def behavior_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DAILY GROWTH ACCOUNTING — the product-analytics identity
+    DAU(t) = new(t) + retained(t) + resurrected(t), with churned(t) =
+    yesterday's actives who did not return, and the Social-Capital
+    QUICK RATIO (new + resurrected) / churned that summarizes whether
+    the user base is filling faster than it drains.  The daily
+    companion to the static ``events_user_lifecycle`` snapshot and the
+    ``retention_cohorts`` triangle.
+
+    Semantics: a user is NEW on their first-ever active day, RETAINED
+    when active the previous calendar day too, RESURRECTED when
+    returning after a gap; churn is attributed to the day AFTER the
+    last active day (censored at the corpus's final day — no user can
+    churn past the observation window).
+
+    Exactness: days are integer indexes from Monday 1970-01-05, so
+    everything is integer arithmetic and counts; the quick ratio is
+    one round-6 division with a NULLIF(0) guard (NULL on churn-free
+    days, identically in both engines).
+
+    Scale shape: see ``_growth_accounting_core``."""
+    ev = load_table(spark, sf_dir, "events")
+    epoch = F.lit(_WK_EPOCH).cast("date")
+    active = ev.select(
+        "user_id",
+        F.datediff(F.col("ts").cast("date"), epoch).cast("long").alias("pi"),
+    ).distinct()
+    return (
+        _growth_accounting_core(active, "dau")
+        .select(
+            F.date_add(epoch, F.col("pi").cast("int")).alias("d"),
+            "dau",
+            "n_new",
+            "n_retained",
+            "n_resurrected",
+            "n_churned",
+            "quick_ratio",
+        )
+        .orderBy("d")
+    )
+
+
+@register(
     "behavior_growth_accounting_wau",
     tags=("behavioral", "growth", "retention", "wau"),
     oracle=_GROWTH_ORACLE.format(
         idx=f"(d - DATE '{_WK_EPOCH}') // 7",
         act="wau",
+        key="period_start",
         start=f"DATE '{_WK_EPOCH}' + CAST(au.pi * 7 AS INTEGER)",
     ),
 )
@@ -571,6 +488,7 @@ def behavior_growth_accounting_wau(
     oracle=_GROWTH_ORACLE.format(
         idx="EXTRACT(YEAR FROM d) * 12 + EXTRACT(MONTH FROM d) - 1",
         act="mau",
+        key="period_start",
         start="MAKE_DATE(CAST(au.pi // 12 AS INTEGER),"
         " CAST(au.pi % 12 + 1 AS INTEGER), 1)",
     ),
@@ -776,11 +694,9 @@ def behavior_weekday_seasonality(
     )
 
 
-@register(
-    "behavior_seasonal_naive_error",
-    tags=("behavioral", "seasonality", "forecast", "eval", "timeseries"),
-    oracle="""
-WITH daily AS (
+# daily event counts with their weekday (days since Monday 1970-01-05,
+# mod 7) and the per-weekday event and day totals
+_SQL_WEEKDAY_MEAN = """daily AS (
   SELECT CAST(ts AS DATE) AS d, CAST(COUNT(*) AS BIGINT) AS n_events
   FROM events GROUP BY 1
 ),
@@ -791,7 +707,35 @@ wmean AS (
   SELECT dw, CAST(SUM(n_events) AS BIGINT) AS w_events,
          CAST(COUNT(*) AS BIGINT) AS w_days
   FROM dow GROUP BY dw
-),
+)"""
+
+
+def _weekday_means(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """(dow, wmean): day-grain ``(dw, d, n_events)`` and the 7-row
+    ``(dw, w_events, w_days)`` weekday totals — the seasonal-naive
+    expectation of a day is w_events / w_days of its weekday."""
+    ev = load_table(spark, sf_dir, "events")
+    daily = ev.groupBy(F.col("ts").cast("date").alias("d")).agg(
+        F.count(F.lit(1)).cast("long").alias("n_events")
+    )
+    dw = F.pmod(
+        F.datediff(F.col("d"), F.lit("1970-01-05").cast("date")), F.lit(7)
+    ).cast("int")
+    dow = daily.select(dw.alias("dw"), "d", "n_events")
+    wmean = dow.groupBy("dw").agg(
+        F.sum("n_events").cast("long").alias("w_events"),
+        F.count(F.lit(1)).cast("long").alias("w_days"),
+    )
+    return dow, wmean
+
+
+@register(
+    "behavior_seasonal_naive_error",
+    tags=("behavioral", "seasonality", "forecast", "eval", "timeseries"),
+    oracle=f"""
+WITH {_SQL_WEEKDAY_MEAN},
 errs AS (
   SELECT dow.dw,
          CAST(ROUND(ABS(dow.n_events
@@ -833,18 +777,7 @@ def behavior_seasonal_naive_error(
     Scale shape: one day-grain aggregate map-side, a 7-row weekday
     mean table joined back at day grain (broadcast), day-grain error
     rows rolled up to 7 — nothing above day grain shuffles."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(F.col("ts").cast("date").alias("d")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_events")
-    )
-    dw = F.pmod(
-        F.datediff(F.col("d"), F.lit("1970-01-05").cast("date")), F.lit(7)
-    ).cast("int")
-    dow = daily.select(dw.alias("dw"), "d", "n_events")
-    wmean = dow.groupBy("dw").agg(
-        F.sum("n_events").cast("long").alias("w_events"),
-        F.count(F.lit(1)).cast("long").alias("w_days"),
-    )
+    dow, wmean = _weekday_means(spark, sf_dir)
     mean = F.col("w_events").cast("double") / F.col("w_days")
     ae = F.abs(F.col("n_events") - mean)
     errs = dow.join(F.broadcast(wmean), "dw").select(
@@ -876,19 +809,8 @@ def behavior_seasonal_naive_error(
 @register(
     "behavior_seasonal_adjusted_anomalies",
     tags=("behavioral", "seasonality", "anomaly", "timeseries"),
-    oracle="""
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS d, CAST(COUNT(*) AS BIGINT) AS n_events
-  FROM events GROUP BY 1
-),
-dow AS (
-  SELECT ((d - DATE '1970-01-05') % 7) AS dw, d, n_events FROM daily
-),
-wmean AS (
-  SELECT dw, CAST(SUM(n_events) AS BIGINT) AS w_events,
-         CAST(COUNT(*) AS BIGINT) AS w_days
-  FROM dow GROUP BY dw
-),
+    oracle=f"""
+WITH {_SQL_WEEKDAY_MEAN},
 resid AS (
   SELECT dow.d, dow.n_events,
          CAST(ROUND((dow.n_events
@@ -935,18 +857,7 @@ def behavior_seasonal_adjusted_anomalies(
     Scale shape: day-grain aggregate + 7-row broadcast + one-row
     moment scalar broadcast back over day-grain rows (written bound in
     tests/test_plan_shapes._BOUNDED_SINGLE_PARTITION)."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(F.col("ts").cast("date").alias("d")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_events")
-    )
-    dw = F.pmod(
-        F.datediff(F.col("d"), F.lit("1970-01-05").cast("date")), F.lit(7)
-    ).cast("int")
-    dow = daily.select(dw.alias("dw"), "d", "n_events")
-    wmean = dow.groupBy("dw").agg(
-        F.sum("n_events").cast("long").alias("w_events"),
-        F.count(F.lit(1)).cast("long").alias("w_days"),
-    )
+    dow, wmean = _weekday_means(spark, sf_dir)
     mean = F.col("w_events").cast("double") / F.col("w_days")
     resid = dow.join(F.broadcast(wmean), "dw").select(
         "d",

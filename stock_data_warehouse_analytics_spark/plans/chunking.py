@@ -23,14 +23,13 @@ from pyspark.sql import functions as F
 from ..operators.chunking import chunk_documents
 from ..session import session_memo
 from ..sources.tables import load_table
+from .llm_text import _SQL_TOKENS as _SQL_TOKS
 from .registry import register
 
 CHUNK_TOKENS = 16
 OVERLAP = 4
 STRIDE = CHUNK_TOKENS - OVERLAP
 
-# shared whitespace tokenization spec (functions/text.py::tokens)
-_SQL_TOKS = r"string_split_regex(lower(trim(text)), '\s+')"
 
 # chunk table CTE shared by all three oracles: starts at 0, STRIDE,
 # 2·STRIDE, … < n_tokens; half-open [start_tok, end_tok) windows
@@ -141,12 +140,10 @@ TOPK = 3
 N_QUERY_DOCS = 2
 SHINGLE_K = 3
 
-
-@register(
-    "chunk_sparse_cosine_topk",
-    tags=("llm", "chunking", "similarity", "rag", "topk"),
-    oracle=f"""
-WITH {_SQL_CHUNKS},
+# the shingle-term chain over the chunk table: per-chunk shingle terms
+# (tf), the df-pruned vocabulary (tf2), per-chunk norms (nrm) and the
+# query-chunk x corpus-chunk overlap counts (dots)
+_SQL_CHUNK_DOTS = f"""{_SQL_CHUNKS},
 ctoks AS (
   SELECT doc_id, chunk_id,
          {_SQL_TOKS.replace('text', 'chunk_text')} AS t
@@ -178,7 +175,35 @@ dots AS (
   FROM tf2 q JOIN tf2 c USING (term)
   WHERE q.doc_id < {N_QUERY_DOCS} AND c.doc_id >= {N_QUERY_DOCS}
   GROUP BY 1, 2, 3, 4
-),
+)"""
+
+
+def _sql_topk_leg(
+    name: str, dots: str, norms: str, depth: int, rnk: bool = True
+) -> str:
+    """CTE ``name``: each query chunk's top-``depth`` corpus chunks by
+    6-dp cosine of the ``dots`` overlaps over the ``norms`` norms
+    (``rnk`` keeps the rank column)."""
+    cols = ", rnk" if rnk else ""
+    return f"""{name} AS (
+  SELECT q_doc, q_chunk, c_doc, c_chunk{cols} FROM (
+    SELECT d.q_doc, d.q_chunk, d.c_doc, d.c_chunk,
+           ROW_NUMBER() OVER (
+             PARTITION BY d.q_doc, d.q_chunk
+             ORDER BY ROUND(CAST(d.dp AS DOUBLE) / (nq.nn * nc.nn), 6)
+                        DESC, d.c_doc, d.c_chunk) AS rnk
+    FROM {dots} d
+    JOIN {norms} nq ON nq.doc_id = d.q_doc AND nq.chunk_id = d.q_chunk
+    JOIN {norms} nc ON nc.doc_id = d.c_doc AND nc.chunk_id = d.c_chunk
+  ) WHERE rnk <= {depth}
+)"""
+
+
+@register(
+    "chunk_sparse_cosine_topk",
+    tags=("llm", "chunking", "similarity", "rag", "topk"),
+    oracle=f"""
+WITH {_SQL_CHUNK_DOTS},
 scored AS (
   SELECT d.q_doc, d.q_chunk, d.c_doc, d.c_chunk,
          ROUND(CAST(d.dp AS DOUBLE) / (nq.nn * nc.nn), 6) AS cosine
@@ -399,8 +424,6 @@ def contamination_chunk_level(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("doc_id")
     )
-
-
 
 
 @register(
@@ -654,57 +677,9 @@ _HY_OUT = 5     # fused list length per query chunk
 
 _SQL_HASH60 = "CAST(('0x' || substr(md5(term), 1, 15)) AS BIGINT)"
 
-
-@register(
-    "chunk_hybrid_rrf_topk",
-    tags=("llm", "chunking", "retrieval", "rrf", "hybrid", "rag"),
-    oracle=f"""
-WITH {_SQL_CHUNKS},
-ctoks AS (
-  SELECT doc_id, chunk_id,
-         {_SQL_TOKS.replace('text', 'chunk_text')} AS t
-  FROM chunks
-),
-sh_all AS (
-  SELECT doc_id, chunk_id, unnest(
-    CASE WHEN len(t) >= {SHINGLE_K} THEN list_distinct(
-           list_transform(generate_series(1, len(t) - {SHINGLE_K - 1}),
-                          i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-         ELSE [array_to_string(t, ' ')] END) AS term
-  FROM ctoks
-),
-tf AS (
-  SELECT doc_id, chunk_id, term FROM sh_all WHERE len(term) > 0
-),
-df AS (
-  SELECT term FROM tf GROUP BY term HAVING COUNT(*) <= {MAX_DF}
-),
-tf2 AS (SELECT tf.* FROM tf JOIN df USING (term)),
-nrm AS (
-  SELECT doc_id, chunk_id, SQRT(CAST(COUNT(*) AS DOUBLE)) AS nn
-  FROM tf2 GROUP BY doc_id, chunk_id
-),
-dots AS (
-  SELECT q.doc_id AS q_doc, q.chunk_id AS q_chunk,
-         c.doc_id AS c_doc, c.chunk_id AS c_chunk,
-         CAST(COUNT(*) AS BIGINT) AS dp
-  FROM tf2 q JOIN tf2 c USING (term)
-  WHERE q.doc_id < {N_QUERY_DOCS} AND c.doc_id >= {N_QUERY_DOCS}
-  GROUP BY 1, 2, 3, 4
-),
-sparse AS (
-  SELECT q_doc, q_chunk, c_doc, c_chunk, rnk FROM (
-    SELECT d.q_doc, d.q_chunk, d.c_doc, d.c_chunk,
-           ROW_NUMBER() OVER (
-             PARTITION BY d.q_doc, d.q_chunk
-             ORDER BY ROUND(CAST(d.dp AS DOUBLE) / (nq.nn * nc.nn), 6)
-                        DESC, d.c_doc, d.c_chunk) AS rnk
-    FROM dots d
-    JOIN nrm nq ON nq.doc_id = d.q_doc AND nq.chunk_id = d.q_chunk
-    JOIN nrm nc ON nc.doc_id = d.c_doc AND nc.chunk_id = d.c_chunk
-  ) WHERE rnk <= {_HY_DEPTH}
-),
-hb AS (
+# the dense leg: hashed term-count vectors (hb), their norms (hn), the
+# query x corpus dot products (hd) and the depth-_HY_DEPTH ranking
+_SQL_DENSE_LEG = f"""hb AS (
   SELECT doc_id, chunk_id,
          CAST({_SQL_HASH60} % {HASH_DIM} AS INTEGER) AS b,
          CAST(COUNT(*) AS BIGINT) AS cnt
@@ -723,19 +698,13 @@ hd AS (
   WHERE q.doc_id < {N_QUERY_DOCS} AND c.doc_id >= {N_QUERY_DOCS}
   GROUP BY 1, 2, 3, 4
 ),
-dense AS (
-  SELECT q_doc, q_chunk, c_doc, c_chunk, rnk FROM (
-    SELECT d.q_doc, d.q_chunk, d.c_doc, d.c_chunk,
-           ROW_NUMBER() OVER (
-             PARTITION BY d.q_doc, d.q_chunk
-             ORDER BY ROUND(CAST(d.dp AS DOUBLE) / (nq.nn * nc.nn), 6)
-                        DESC, d.c_doc, d.c_chunk) AS rnk
-    FROM hd d
-    JOIN hn nq ON nq.doc_id = d.q_doc AND nq.chunk_id = d.q_chunk
-    JOIN hn nc ON nc.doc_id = d.c_doc AND nc.chunk_id = d.c_chunk
-  ) WHERE rnk <= {_HY_DEPTH}
-),
-fused AS (
+{_sql_topk_leg('dense', 'hd', 'hn', _HY_DEPTH)}"""
+
+
+def _sql_rrf_fused(sparse: str) -> str:
+    """CTE ``fused``: reciprocal-rank fusion of ``dense`` with the
+    ranked sparse leg ``sparse``."""
+    return f"""fused AS (
   SELECT COALESCE(d.q_doc, s.q_doc) AS q_doc,
          COALESCE(d.q_chunk, s.q_chunk) AS q_chunk,
          COALESCE(d.c_doc, s.c_doc) AS c_doc,
@@ -743,10 +712,20 @@ fused AS (
          COALESCE(1.0 / ({_HY_K} + d.rnk), 0)
            + COALESCE(1.0 / ({_HY_K} + s.rnk), 0) AS score
   FROM dense d
-  FULL OUTER JOIN sparse s
+  FULL OUTER JOIN {sparse} s
     ON s.q_doc = d.q_doc AND s.q_chunk = d.q_chunk
    AND s.c_doc = d.c_doc AND s.c_chunk = d.c_chunk
-)
+)"""
+
+
+@register(
+    "chunk_hybrid_rrf_topk",
+    tags=("llm", "chunking", "retrieval", "rrf", "hybrid", "rag"),
+    oracle=f"""
+WITH {_SQL_CHUNK_DOTS},
+{_sql_topk_leg('sparse', 'dots', 'nrm', _HY_DEPTH)},
+{_SQL_DENSE_LEG},
+{_sql_rrf_fused('sparse')}
 SELECT q_doc, q_chunk, c_doc, c_chunk, rrf_rank,
        ROUND(score, 9) AS rrf_score
 FROM (
@@ -1067,106 +1046,11 @@ _RC_K = 5  # recall depth
     "eval_rag_retrieval_recall",
     tags=("llm", "chunking", "retrieval", "eval", "recall", "rag"),
     oracle=f"""
-WITH {_SQL_CHUNKS},
-ctoks AS (
-  SELECT doc_id, chunk_id,
-         {_SQL_TOKS.replace('text', 'chunk_text')} AS t
-  FROM chunks
-),
-sh_all AS (
-  SELECT doc_id, chunk_id, unnest(
-    CASE WHEN len(t) >= {SHINGLE_K} THEN list_distinct(
-           list_transform(generate_series(1, len(t) - {SHINGLE_K - 1}),
-                          i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-         ELSE [array_to_string(t, ' ')] END) AS term
-  FROM ctoks
-),
-tf AS (
-  SELECT doc_id, chunk_id, term FROM sh_all WHERE len(term) > 0
-),
-df AS (
-  SELECT term FROM tf GROUP BY term HAVING COUNT(*) <= {MAX_DF}
-),
-tf2 AS (SELECT tf.* FROM tf JOIN df USING (term)),
-nrm AS (
-  SELECT doc_id, chunk_id, SQRT(CAST(COUNT(*) AS DOUBLE)) AS nn
-  FROM tf2 GROUP BY doc_id, chunk_id
-),
-dots AS (
-  SELECT q.doc_id AS q_doc, q.chunk_id AS q_chunk,
-         c.doc_id AS c_doc, c.chunk_id AS c_chunk,
-         CAST(COUNT(*) AS BIGINT) AS dp
-  FROM tf2 q JOIN tf2 c USING (term)
-  WHERE q.doc_id < {N_QUERY_DOCS} AND c.doc_id >= {N_QUERY_DOCS}
-  GROUP BY 1, 2, 3, 4
-),
-sparse AS (
-  SELECT q_doc, q_chunk, c_doc, c_chunk FROM (
-    SELECT d.q_doc, d.q_chunk, d.c_doc, d.c_chunk,
-           ROW_NUMBER() OVER (
-             PARTITION BY d.q_doc, d.q_chunk
-             ORDER BY ROUND(CAST(d.dp AS DOUBLE) / (nq.nn * nc.nn), 6)
-                        DESC, d.c_doc, d.c_chunk) AS rnk
-    FROM dots d
-    JOIN nrm nq ON nq.doc_id = d.q_doc AND nq.chunk_id = d.q_chunk
-    JOIN nrm nc ON nc.doc_id = d.c_doc AND nc.chunk_id = d.c_chunk
-  ) WHERE rnk <= {_RC_K}
-),
-hb AS (
-  SELECT doc_id, chunk_id,
-         CAST({_SQL_HASH60} % {HASH_DIM} AS INTEGER) AS b,
-         CAST(COUNT(*) AS BIGINT) AS cnt
-  FROM tf GROUP BY 1, 2, 3
-),
-hn AS (
-  SELECT doc_id, chunk_id,
-         SQRT(CAST(SUM(cnt * cnt) AS DOUBLE)) AS nn
-  FROM hb GROUP BY 1, 2
-),
-hd AS (
-  SELECT q.doc_id AS q_doc, q.chunk_id AS q_chunk,
-         c.doc_id AS c_doc, c.chunk_id AS c_chunk,
-         CAST(SUM(q.cnt * c.cnt) AS BIGINT) AS dp
-  FROM hb q JOIN hb c USING (b)
-  WHERE q.doc_id < {N_QUERY_DOCS} AND c.doc_id >= {N_QUERY_DOCS}
-  GROUP BY 1, 2, 3, 4
-),
-dense AS (
-  SELECT q_doc, q_chunk, c_doc, c_chunk, rnk FROM (
-    SELECT d.q_doc, d.q_chunk, d.c_doc, d.c_chunk,
-           ROW_NUMBER() OVER (
-             PARTITION BY d.q_doc, d.q_chunk
-             ORDER BY ROUND(CAST(d.dp AS DOUBLE) / (nq.nn * nc.nn), 6)
-                        DESC, d.c_doc, d.c_chunk) AS rnk
-    FROM hd d
-    JOIN hn nq ON nq.doc_id = d.q_doc AND nq.chunk_id = d.q_chunk
-    JOIN hn nc ON nc.doc_id = d.c_doc AND nc.chunk_id = d.c_chunk
-  ) WHERE rnk <= {_HY_DEPTH}
-),
-sparse10 AS (
-  SELECT q_doc, q_chunk, c_doc, c_chunk, rnk FROM (
-    SELECT d.q_doc, d.q_chunk, d.c_doc, d.c_chunk,
-           ROW_NUMBER() OVER (
-             PARTITION BY d.q_doc, d.q_chunk
-             ORDER BY ROUND(CAST(d.dp AS DOUBLE) / (nq.nn * nc.nn), 6)
-                        DESC, d.c_doc, d.c_chunk) AS rnk
-    FROM dots d
-    JOIN nrm nq ON nq.doc_id = d.q_doc AND nq.chunk_id = d.q_chunk
-    JOIN nrm nc ON nc.doc_id = d.c_doc AND nc.chunk_id = d.c_chunk
-  ) WHERE rnk <= {_HY_DEPTH}
-),
-fused AS (
-  SELECT COALESCE(d.q_doc, s.q_doc) AS q_doc,
-         COALESCE(d.q_chunk, s.q_chunk) AS q_chunk,
-         COALESCE(d.c_doc, s.c_doc) AS c_doc,
-         COALESCE(d.c_chunk, s.c_chunk) AS c_chunk,
-         COALESCE(1.0 / ({_HY_K} + d.rnk), 0)
-           + COALESCE(1.0 / ({_HY_K} + s.rnk), 0) AS score
-  FROM dense d
-  FULL OUTER JOIN sparse10 s
-    ON s.q_doc = d.q_doc AND s.q_chunk = d.q_chunk
-   AND s.c_doc = d.c_doc AND s.c_chunk = d.c_chunk
-),
+WITH {_SQL_CHUNK_DOTS},
+{_sql_topk_leg('sparse', 'dots', 'nrm', _RC_K, rnk=False)},
+{_SQL_DENSE_LEG},
+{_sql_topk_leg('sparse10', 'dots', 'nrm', _HY_DEPTH)},
+{_sql_rrf_fused('sparse10')},
 hybrid AS (
   SELECT q_doc, q_chunk, c_doc, c_chunk FROM (
     SELECT q_doc, q_chunk, c_doc, c_chunk,
@@ -1309,82 +1193,9 @@ eval_rag_retrieval_recall.__doc__ = eval_rag_retrieval_recall.__doc__.format(
     "eval_retrieval_mrr_map",
     tags=("llm", "chunking", "retrieval", "eval", "mrr", "map", "rag"),
     oracle=f"""
-WITH {_SQL_CHUNKS},
-ctoks AS (
-  SELECT doc_id, chunk_id,
-         {_SQL_TOKS.replace('text', 'chunk_text')} AS t
-  FROM chunks
-),
-sh_all AS (
-  SELECT doc_id, chunk_id, unnest(
-    CASE WHEN len(t) >= {SHINGLE_K} THEN list_distinct(
-           list_transform(generate_series(1, len(t) - {SHINGLE_K - 1}),
-                          i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-         ELSE [array_to_string(t, ' ')] END) AS term
-  FROM ctoks
-),
-tf AS (
-  SELECT doc_id, chunk_id, term FROM sh_all WHERE len(term) > 0
-),
-df AS (
-  SELECT term FROM tf GROUP BY term HAVING COUNT(*) <= {MAX_DF}
-),
-tf2 AS (SELECT tf.* FROM tf JOIN df USING (term)),
-nrm AS (
-  SELECT doc_id, chunk_id, SQRT(CAST(COUNT(*) AS DOUBLE)) AS nn
-  FROM tf2 GROUP BY doc_id, chunk_id
-),
-dots AS (
-  SELECT q.doc_id AS q_doc, q.chunk_id AS q_chunk,
-         c.doc_id AS c_doc, c.chunk_id AS c_chunk,
-         CAST(COUNT(*) AS BIGINT) AS dp
-  FROM tf2 q JOIN tf2 c USING (term)
-  WHERE q.doc_id < {N_QUERY_DOCS} AND c.doc_id >= {N_QUERY_DOCS}
-  GROUP BY 1, 2, 3, 4
-),
-sparse AS (
-  SELECT q_doc, q_chunk, c_doc, c_chunk FROM (
-    SELECT d.q_doc, d.q_chunk, d.c_doc, d.c_chunk,
-           ROW_NUMBER() OVER (
-             PARTITION BY d.q_doc, d.q_chunk
-             ORDER BY ROUND(CAST(d.dp AS DOUBLE) / (nq.nn * nc.nn), 6)
-                        DESC, d.c_doc, d.c_chunk) AS rnk
-    FROM dots d
-    JOIN nrm nq ON nq.doc_id = d.q_doc AND nq.chunk_id = d.q_chunk
-    JOIN nrm nc ON nc.doc_id = d.c_doc AND nc.chunk_id = d.c_chunk
-  ) WHERE rnk <= {_RC_K}
-),
-hb AS (
-  SELECT doc_id, chunk_id,
-         CAST({_SQL_HASH60} % {HASH_DIM} AS INTEGER) AS b,
-         CAST(COUNT(*) AS BIGINT) AS cnt
-  FROM tf GROUP BY 1, 2, 3
-),
-hn AS (
-  SELECT doc_id, chunk_id,
-         SQRT(CAST(SUM(cnt * cnt) AS DOUBLE)) AS nn
-  FROM hb GROUP BY 1, 2
-),
-hd AS (
-  SELECT q.doc_id AS q_doc, q.chunk_id AS q_chunk,
-         c.doc_id AS c_doc, c.chunk_id AS c_chunk,
-         CAST(SUM(q.cnt * c.cnt) AS BIGINT) AS dp
-  FROM hb q JOIN hb c USING (b)
-  WHERE q.doc_id < {N_QUERY_DOCS} AND c.doc_id >= {N_QUERY_DOCS}
-  GROUP BY 1, 2, 3, 4
-),
-dense AS (
-  SELECT q_doc, q_chunk, c_doc, c_chunk, rnk FROM (
-    SELECT d.q_doc, d.q_chunk, d.c_doc, d.c_chunk,
-           ROW_NUMBER() OVER (
-             PARTITION BY d.q_doc, d.q_chunk
-             ORDER BY ROUND(CAST(d.dp AS DOUBLE) / (nq.nn * nc.nn), 6)
-                        DESC, d.c_doc, d.c_chunk) AS rnk
-    FROM hd d
-    JOIN hn nq ON nq.doc_id = d.q_doc AND nq.chunk_id = d.q_chunk
-    JOIN hn nc ON nc.doc_id = d.c_doc AND nc.chunk_id = d.c_chunk
-  ) WHERE rnk <= {_HY_DEPTH}
-),
+WITH {_SQL_CHUNK_DOTS},
+{_sql_topk_leg('sparse', 'dots', 'nrm', _RC_K, rnk=False)},
+{_SQL_DENSE_LEG},
 truth_n AS (
   SELECT q_doc, q_chunk, CAST(COUNT(*) AS BIGINT) AS n_truth
   FROM sparse GROUP BY q_doc, q_chunk

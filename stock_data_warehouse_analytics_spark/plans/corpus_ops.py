@@ -14,37 +14,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.dedup import (
-    MAX_DF_FLOOR,
-    MAX_DF_FRAC_DEN,
-    hash_int60,
-    shingle_table,
-)
+from ..operators.dedup import shingle_table
 from ..sources.tables import load_table
 from .exact import davg, dsum, sql_davg, sql_dsum
+from .llm_dedup import _SQL_SHINGLES, _SQL_TOKENS
+from .llm_sampling import _sql_mix_selected, corpus_tag, mix_selected
 from .registry import register
 
-_SQL_TOKENS = r"string_split_regex(lower(trim(text)), '\s+')"
-
-# Mirror of operators.dedup.shingle_table(max_df="auto") — see
-# plans/llm_dedup.py for the capping rationale.
-_SQL_SHINGLES = f"""
-toks AS (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents),
-sh_all AS (
-  SELECT doc_id, unnest(
-    CASE WHEN len(t) >= 3 THEN list_distinct(
-           list_transform(generate_series(1, len(t) - 2),
-                          i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-         ELSE [array_to_string(t, ' ')] END) AS shingle
-  FROM toks
-),
-sh AS (
-  SELECT doc_id, shingle FROM sh_all
-  QUALIFY COUNT(*) OVER (PARTITION BY shingle)
-          <= (SELECT GREATEST({MAX_DF_FLOOR}, COUNT(*) // {MAX_DF_FRAC_DEN})
-              FROM documents)
-)
-"""
 
 # Containment threshold 0.8 as an integer cross-multiply (5c >= 4n) —
 # no float comparison on the keep/drop boundary.
@@ -145,17 +121,7 @@ rates AS (
                     * n_total * {_TEMP_BUDGET!r} / n_avail) AS accept_rate
   FROM sizes CROSS JOIN tot
 )
-SELECT t.corpus,
-       r.n_avail,
-       ROUND(r.accept_rate, 6) AS accept_rate,
-       COUNT(*) FILTER (
-         WHERE ({_SQL_H60.format(x="doc_id::VARCHAR || ':' || t.text")} % 1000000)
-               < floor(r.accept_rate * 1000000)::BIGINT
-       ) AS n_selected
-FROM tagged t JOIN rates r USING (corpus)
-GROUP BY t.corpus, r.n_avail, r.accept_rate
-ORDER BY t.corpus
-""",
+{_sql_mix_selected(_SQL_H60.format(x="doc_id::VARCHAR || ':' || t.text"))}""",
 )
 def mix_sqrt_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-scaled corpus mixing (T=2 ⇒ weights ∝ n^(1/2)) — the
@@ -169,12 +135,7 @@ def mix_sqrt_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast, map-side accept — one scan + one tiny agg at any
     scale."""
     d = load_table(spark, sf_dir, "documents")
-    corpus = (
-        F.when(hash_int60(F.col("source")) % 3 == 0, "web")
-        .when(hash_int60(F.col("source")) % 3 == 1, "books")
-        .otherwise("code")
-    )
-    tagged = d.withColumn("corpus", corpus)
+    tagged = d.withColumn("corpus", corpus_tag())
     sizes = tagged.groupBy("corpus").agg(F.count(F.lit(1)).alias("n_avail"))
     tot = sizes.agg(
         F.sum("n_avail").alias("n_total"),
@@ -191,23 +152,7 @@ def mix_sqrt_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.col("n_avail"),
         ).alias("accept_rate"),
     )
-    keybucket = hash_int60(
-        F.concat(F.col("doc_id").cast("string"), F.lit(":"), F.col("text"))
-    ) % 1_000_000
-    return (
-        tagged.join(F.broadcast(rates), "corpus")
-        .groupBy("corpus", "n_avail", F.round("accept_rate", 6).alias("accept_rate"))
-        .agg(
-            F.count(
-                F.when(
-                    keybucket
-                    < F.floor(F.col("accept_rate") * 1_000_000).cast("long"),
-                    1,
-                )
-            ).alias("n_selected")
-        )
-        .orderBy("corpus")
-    )
+    return mix_selected(tagged, rates)
 
 
 _VOCAB_POINTS = 16  # fixed number of growth-curve samples

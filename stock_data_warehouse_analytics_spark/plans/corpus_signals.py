@@ -25,13 +25,13 @@ from pyspark.sql import functions as F
 from ..functions.text import tokens
 from ..sources.tables import load_table
 from ..operators.localrel import literal_df
+from .llm_text import _SQL_TOKENS as _SQL_TOKS
 from .registry import register
 
 _TR_VOCAB = 50  # top-V vocabulary (Heaps-bounded graph size)
 _TR_ROUNDS = 8  # fixed power-iteration rounds (the PageRank stance)
 _TR_TOP = 10  # keywords reported
 _TR_BASE = 150_000  # (1 − d) · 1e6 with damping d = 0.85
-_SQL_TOKS = r"string_split_regex(lower(trim(text)), '\s+')"
 
 
 def _textrank_oracle() -> str:

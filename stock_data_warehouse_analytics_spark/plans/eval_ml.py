@@ -31,9 +31,9 @@ from ..operators.dedup import hash_int60
 from ..operators.similarity import topk_bruteforce
 from ..sources.tables import load_table
 from .exact import dsum, sql_dsum
+from .llm_text import _SQL_TOKENS as _SQL_TOKS
 from .registry import register
 
-_SQL_TOKS = r"string_split_regex(lower(trim(text)), '\s+')"
 _SQL_H60 = "('0x' || substr(md5({x}), 1, 15))::BIGINT"
 _TWO60 = float(1 << 60)
 

@@ -64,11 +64,10 @@ def _half_bits(vec: F.Column, base: int) -> F.Column:
     )
 
 
-@register(
-    "emb_binary_quantization",
-    tags=("llm", "embedding", "quantization", "similarity", "eval"),
-    oracle=f"""
-WITH base AS (
+# sign-bit words and unit vectors per embedding, split into the bounded
+# query side ``q(query_id, qw1, qw2, qn)`` and the corpus side
+# ``c(neighbor_id, cw1, cw2, cn)``
+_SQL_BQ_QC = f"""base AS (
   SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
 ),
 bits AS (
@@ -81,7 +80,14 @@ bits AS (
 q AS (SELECT vec_id AS query_id, w1 AS qw1, w2 AS qw2, vn AS qn
       FROM bits WHERE vec_id < {_BQ_NQ}),
 c AS (SELECT vec_id AS neighbor_id, w1 AS cw1, w2 AS cw2, vn AS cn
-      FROM bits),
+      FROM bits)"""
+
+
+@register(
+    "emb_binary_quantization",
+    tags=("llm", "embedding", "quantization", "similarity", "eval"),
+    oracle=f"""
+WITH {_SQL_BQ_QC},
 scored AS (
   SELECT query_id, neighbor_id,
          bit_count(xor(qw1, cw1)) + bit_count(xor(qw2, cw2)) AS hamming,
@@ -522,20 +528,7 @@ _BR_K = 5  # final list length
     "sim_topk_binary_rerank",
     tags=("llm", "similarity", "ann", "quantization", "rerank"),
     oracle=f"""
-WITH base AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-),
-bits AS (
-  SELECT vec_id,
-         {_sql_half_bits('v', 0)} AS w1,
-         {_sql_half_bits('v', 32)} AS w2,
-         list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS vn
-  FROM base
-),
-q AS (SELECT vec_id AS query_id, w1 AS qw1, w2 AS qw2, vn AS qn
-      FROM bits WHERE vec_id < {_BQ_NQ}),
-c AS (SELECT vec_id AS neighbor_id, w1 AS cw1, w2 AS cw2, vn AS cn
-      FROM bits),
+WITH {_SQL_BQ_QC},
 hamm AS (
   SELECT query_id, neighbor_id, qn, cn,
          bit_count(xor(qw1, cw1)) + bit_count(xor(qw2, cw2)) AS hamming
@@ -684,20 +677,7 @@ _BD_SWEEP = (5, 10, 25, 50, 100)  # stage-1 Hamming candidate depths
     "sim_binary_cand_depth_tuning",
     tags=("llm", "similarity", "ann", "quantization", "tuning", "eval"),
     oracle=f"""
-WITH base AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-),
-bits AS (
-  SELECT vec_id,
-         {_sql_half_bits('v', 0)} AS w1,
-         {_sql_half_bits('v', 32)} AS w2,
-         list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS vn
-  FROM base
-),
-q AS (SELECT vec_id AS query_id, w1 AS qw1, w2 AS qw2, vn AS qn
-      FROM bits WHERE vec_id < {_BQ_NQ}),
-c AS (SELECT vec_id AS neighbor_id, w1 AS cw1, w2 AS cw2, vn AS cn
-      FROM bits),
+WITH {_SQL_BQ_QC},
 hamm AS (
   SELECT query_id, neighbor_id,
          ROW_NUMBER() OVER (

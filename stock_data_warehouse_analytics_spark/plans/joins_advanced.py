@@ -204,12 +204,14 @@ def _asof_nearest(
     )
 
 
-@register(
-    "join_asof_purchase_value",
-    tags=("join", "asof", "window"),
-    oracle=f"""
+_ASOF_OP = {"backward": ">=", "forward": "<="}
+
+
+def _sql_asof_purchase(col: str, direction: str) -> str:
+    """DuckDB ``ASOF LEFT JOIN`` mirror of :func:`_asof_purchase`."""
+    return f"""
 WITH build AS (
-  SELECT user_id, ts, MAX(value) AS last_purchase
+  SELECT user_id, ts, MAX(value) AS {col}
   FROM events WHERE event_type = 'purchase' GROUP BY user_id, ts
 ),
 probe AS (
@@ -217,13 +219,49 @@ probe AS (
 )
 SELECT probe.user_id % 16 AS user_bucket,
        COUNT(*) AS n_clicks,
-       COUNT(last_purchase) AS n_matched,
-       ROUND({sql_davg('last_purchase')}, 6) AS avg_last_purchase
+       COUNT({col}) AS n_matched,
+       ROUND({sql_davg(col)}, 6) AS avg_{col}
 FROM probe ASOF LEFT JOIN build
-  ON probe.user_id = build.user_id AND probe.ts >= build.ts
+  ON probe.user_id = build.user_id AND probe.ts {_ASOF_OP[direction]} build.ts
 GROUP BY 1
 ORDER BY 1
-""",
+"""
+
+
+def _asof_purchase(
+    spark: SparkSession, sf_dir: str, col: str, direction: str
+) -> DataFrame:
+    """Per user bucket (user_id % 16): clicks, clicks matched to a
+    purchase of the same user, and the exact mean matched value
+    ``avg_{col}`` — each click takes the value of the user's latest
+    purchase at or before it (``backward``) or earliest at or after it
+    (``forward``), through :func:`asof_join`'s single-shuffle union +
+    window sweep."""
+    e = load_table(spark, sf_dir, "events")
+    probe = e.filter(F.col("event_type") == "click").select("user_id", "ts")
+    build = (
+        e.filter(F.col("event_type") == "purchase")
+        .groupBy("user_id", "ts")
+        .agg(F.max("value").alias(col))
+    )
+    joined = asof_join(
+        probe, build, on="user_id", value_col=col, direction=direction
+    )
+    return (
+        joined.groupBy((F.col("user_id") % 16).alias("user_bucket"))
+        .agg(
+            F.count(F.lit(1)).alias("n_clicks"),
+            F.count(col).alias("n_matched"),
+            F.round(davg(col), 6).alias(f"avg_{col}"),
+        )
+        .orderBy("user_bucket")
+    )
+
+
+@register(
+    "join_asof_purchase_value",
+    tags=("join", "asof", "window"),
+    oracle=_sql_asof_purchase("last_purchase", "backward"),
 )
 def join_asof_purchase_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join (``pd.merge_asof`` / DuckDB ``ASOF JOIN`` analog): each
@@ -231,25 +269,21 @@ def join_asof_purchase_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     via the union + last(ignorenulls) window sweep in :func:`asof_join`
     — one shuffle, no range explosion.  Aggregated per user bucket so
     the compared result stays small."""
-    e = load_table(spark, sf_dir, "events")
-    probe = e.filter(F.col("event_type") == "click").select("user_id", "ts")
-    build = (
-        e.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id", "ts")
-        .agg(F.max("value").alias("last_purchase"))
-    )
-    joined = asof_join(
-        probe, build, on="user_id", value_col="last_purchase"
-    )
-    return (
-        joined.groupBy((F.col("user_id") % 16).alias("user_bucket"))
-        .agg(
-            F.count(F.lit(1)).alias("n_clicks"),
-            F.count("last_purchase").alias("n_matched"),
-            F.round(davg("last_purchase"), 6).alias("avg_last_purchase"),
-        )
-        .orderBy("user_bucket")
-    )
+    return _asof_purchase(spark, sf_dir, "last_purchase", "backward")
+
+
+@register(
+    "join_asof_next_purchase",
+    tags=("join", "asof", "forward", "window"),
+    oracle=_sql_asof_purchase("next_purchase", "forward"),
+)
+def join_asof_next_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """FORWARD as-of join: each click picks up the same user's NEXT
+    purchase value (the attribution / time-to-conversion direction,
+    ``pd.merge_asof(direction='forward')``).  Same single-shuffle
+    union + first(ignorenulls) sweep as the backward variant —
+    direction only flips the tag order and the window frame."""
+    return _asof_purchase(spark, sf_dir, "next_purchase", "forward")
 
 
 _BANDS = [
@@ -347,55 +381,6 @@ def set_multiset_custkeys(spark: SparkSession, sf_dir: str) -> DataFrame:
         summarize(urgent.intersectAll(high), "common")
         .unionByName(summarize(urgent.exceptAll(high), "urgent_surplus"))
         .orderBy("op")
-    )
-
-
-@register(
-    "join_asof_next_purchase",
-    tags=("join", "asof", "forward", "window"),
-    oracle=f"""
-WITH build AS (
-  SELECT user_id, ts, MAX(value) AS next_purchase
-  FROM events WHERE event_type = 'purchase' GROUP BY user_id, ts
-),
-probe AS (
-  SELECT user_id, ts FROM events WHERE event_type = 'click'
-)
-SELECT probe.user_id % 16 AS user_bucket,
-       COUNT(*) AS n_clicks,
-       COUNT(next_purchase) AS n_matched,
-       ROUND({sql_davg('next_purchase')}, 6) AS avg_next_purchase
-FROM probe ASOF LEFT JOIN build
-  ON probe.user_id = build.user_id AND probe.ts <= build.ts
-GROUP BY 1
-ORDER BY 1
-""",
-)
-def join_asof_next_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FORWARD as-of join: each click picks up the same user's NEXT
-    purchase value (the attribution / time-to-conversion direction,
-    ``pd.merge_asof(direction='forward')``).  Same single-shuffle
-    union + first(ignorenulls) sweep as the backward variant —
-    direction only flips the tag order and the window frame."""
-    e = load_table(spark, sf_dir, "events")
-    probe = e.filter(F.col("event_type") == "click").select("user_id", "ts")
-    build = (
-        e.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id", "ts")
-        .agg(F.max("value").alias("next_purchase"))
-    )
-    joined = asof_join(
-        probe, build, on="user_id", value_col="next_purchase",
-        direction="forward",
-    )
-    return (
-        joined.groupBy((F.col("user_id") % 16).alias("user_bucket"))
-        .agg(
-            F.count(F.lit(1)).alias("n_clicks"),
-            F.count("next_purchase").alias("n_matched"),
-            F.round(davg("next_purchase"), 6).alias("avg_next_purchase"),
-        )
-        .orderBy("user_bucket")
     )
 
 

@@ -27,16 +27,12 @@ from ..operators.dedup import (
 from ..session import session_memo
 from ..sources.tables import load_table
 from ..operators.localrel import literal_df
+from .llm_text import _SQL_TOKENS
 from .registry import register
 
-_SQL_TOKENS = r"string_split_regex(lower(trim(text)), '\s+')"
 
-# Shingle CTE with the hot-shingle document-frequency cap (mirror of
-# operators.dedup.shingle_table(max_df="auto"): a shingle kept iff its
-# df <= max(MAX_DF_FLOOR, n_docs // MAX_DF_FRAC_DEN)).  Integer-only
-# arithmetic so the boundary is bit-identical cross-engine.
-_SQL_SHINGLES = f"""
-toks AS (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents),
+# distinct word-3-gram shingles per document, ``sh_all(doc_id, shingle)``
+_SQL_SH_ALL = f"""toks AS (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents),
 sh_all AS (
   SELECT doc_id, unnest(
     CASE WHEN len(t) >= 3 THEN list_distinct(
@@ -44,7 +40,14 @@ sh_all AS (
                           i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
          ELSE [array_to_string(t, ' ')] END) AS shingle
   FROM toks
-),
+)"""
+
+# Shingle CTE with the hot-shingle document-frequency cap (mirror of
+# operators.dedup.shingle_table(max_df="auto"): a shingle kept iff its
+# df <= max(MAX_DF_FLOOR, n_docs // MAX_DF_FRAC_DEN)).  Integer-only
+# arithmetic so the boundary is bit-identical cross-engine.
+_SQL_SHINGLES = f"""
+{_SQL_SH_ALL},
 sh AS (
   SELECT doc_id, shingle FROM sh_all
   QUALIFY COUNT(*) OVER (PARTITION BY shingle)
@@ -186,11 +189,10 @@ def _cc_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_memo(spark, ("llm_dedup.cc", sf_dir), build)
 
 
-@register(
-    "dedup_clusters_cc",
-    tags=("llm", "dedup", "graph", "connected-components"),
-    oracle=f"""
-WITH RECURSIVE {_sql_minhash_ctes()},
+# MinHash-LSH pairs closed into components by a recursive CTE, ending in
+# ``assign(doc_id, cluster_id)`` with cluster_id = min member doc_id
+# (needs ``WITH RECURSIVE``)
+_SQL_CC_ASSIGN = f"""{_sql_minhash_ctes()},
 sym AS (
   SELECT doc_a AS a, doc_b AS b FROM pairs
   UNION
@@ -203,7 +205,13 @@ reach(node, comp) AS (
 ),
 assign AS (
   SELECT node AS doc_id, MIN(comp) AS cluster_id FROM reach GROUP BY node
-)
+)"""
+
+@register(
+    "dedup_clusters_cc",
+    tags=("llm", "dedup", "graph", "connected-components"),
+    oracle=f"""
+WITH RECURSIVE {_SQL_CC_ASSIGN}
 SELECT doc_id, cluster_id,
        COUNT(*) OVER (PARTITION BY cluster_id) AS cluster_size,
        (doc_id = cluster_id) AS is_survivor
@@ -277,20 +285,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_keep_representative",
     tags=("llm", "dedup", "end-to-end"),
     oracle=f"""
-WITH RECURSIVE {_sql_minhash_ctes()},
-sym AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION
-  SELECT doc_b, doc_a FROM pairs
-),
-reach(node, comp) AS (
-  SELECT DISTINCT a, a FROM sym
-  UNION
-  SELECT s.a, r.comp FROM sym s JOIN reach r ON r.node = s.b
-),
-assign AS (
-  SELECT node AS doc_id, MIN(comp) AS cluster_id FROM reach GROUP BY node
-),
+WITH RECURSIVE {_SQL_CC_ASSIGN},
 decided AS (
   SELECT d.doc_id, d.lang, d.source,
          (a.doc_id IS NULL OR a.doc_id = a.cluster_id) AS keep
@@ -330,11 +325,8 @@ def dedup_keep_representative(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SUBSTR_K = 8  # seed width = minimum reportable span, in tokens
 
-# CTE chain ending in ``spans(doc_a, doc_b, start_a, start_b,
-# span_tokens, n_seed_matches)`` — the maximal-shared-span table,
-# shared by the span query and the coverage rollup.
-_SQL_SPANS = f"""
-toks AS (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents),
+# the df-capped positioned k-gram seeds ``ps(doc_id, pos, shingle)``
+_SQL_SEEDS = f"""toks AS (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents),
 ps_all AS (
   SELECT doc_id,
          unnest(generate_series(1, len(t) - {_SUBSTR_K - 1})) AS pos,
@@ -347,7 +339,13 @@ ps AS (
   QUALIFY COUNT(*) OVER (PARTITION BY shingle)
           <= (SELECT GREATEST({MAX_DF_FLOOR}, COUNT(*) // {MAX_DF_FRAC_DEN})
               FROM documents)
-),
+)"""
+
+# CTE chain ending in ``spans(doc_a, doc_b, start_a, start_b,
+# span_tokens, n_seed_matches)`` — the maximal-shared-span table,
+# shared by the span query and the coverage rollup.
+_SQL_SPANS = f"""
+{_SQL_SEEDS},
 m AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
          a.pos AS pos_a, a.pos - b.pos AS diag
@@ -369,6 +367,35 @@ spans AS (
   FROM isl
   GROUP BY doc_a, doc_b, diag, grp
   HAVING MAX(pos_a) - MIN(pos_a) + {_SUBSTR_K} >= {_SUBSTR_K}
+)"""
+
+
+# the body of ``iv`` (both sides' spans as distinct [s, e] token
+# intervals) and the interval-union islands over it, ending in
+# ``merged(doc_id, isl, ms, me)``
+_SQL_MERGED_SPANS = """SELECT DISTINCT doc_id, s, e FROM (
+    SELECT doc_a AS doc_id, start_a AS s,
+           start_a + span_tokens - 1 AS e FROM spans
+    UNION ALL
+    SELECT doc_b, start_b, start_b + span_tokens - 1 FROM spans
+  )
+),
+marked AS (
+  SELECT doc_id, s, e,
+         CASE WHEN s > COALESCE(MAX(e) OVER (PARTITION BY doc_id
+                ORDER BY s, e ROWS BETWEEN UNBOUNDED PRECEDING
+                AND 1 PRECEDING), -1) THEN 1 ELSE 0 END AS new_isl
+  FROM iv
+),
+isl2 AS (
+  SELECT doc_id, s, e,
+         SUM(new_isl) OVER (PARTITION BY doc_id ORDER BY s, e
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS isl
+  FROM marked
+),
+merged AS (
+  SELECT doc_id, isl, MIN(s) AS ms, MAX(e) AS me
+  FROM isl2 GROUP BY doc_id, isl
 )"""
 
 
@@ -480,30 +507,7 @@ iv AS (
   -- (s, e) window order non-total, and the two island windows below
   -- may sort independently — swapped twins split across islands and
   -- bridge gaps (nondeterministic results; see union_intervals)
-  SELECT DISTINCT doc_id, s, e FROM (
-    SELECT doc_a AS doc_id, start_a AS s,
-           start_a + span_tokens - 1 AS e FROM spans
-    UNION ALL
-    SELECT doc_b, start_b, start_b + span_tokens - 1 FROM spans
-  )
-),
-marked AS (
-  SELECT doc_id, s, e,
-         CASE WHEN s > COALESCE(MAX(e) OVER (PARTITION BY doc_id
-                ORDER BY s, e ROWS BETWEEN UNBOUNDED PRECEDING
-                AND 1 PRECEDING), -1) THEN 1 ELSE 0 END AS new_isl
-  FROM iv
-),
-isl2 AS (
-  SELECT doc_id, s, e,
-         SUM(new_isl) OVER (PARTITION BY doc_id ORDER BY s, e
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS isl
-  FROM marked
-),
-merged AS (
-  SELECT doc_id, isl, MIN(s) AS ms, MAX(e) AS me
-  FROM isl2 GROUP BY doc_id, isl
-),
+  {_SQL_MERGED_SPANS},
 cov AS (
   SELECT doc_id, CAST(SUM(me - ms + 1) AS BIGINT) AS covered_tokens,
          COUNT(*) AS n_intervals
@@ -544,20 +548,7 @@ _CONTAM_MIN_SPAN = 13  # GPT-3-style 13-gram contamination rule
     "contamination_span_level",
     tags=("llm", "dedup", "contamination", "eval", "islands"),
     oracle=f"""
-WITH toks AS (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents),
-ps_all AS (
-  SELECT doc_id,
-         unnest(generate_series(1, len(t) - {_SUBSTR_K - 1})) AS pos,
-         unnest(list_transform(generate_series(1, len(t) - {_SUBSTR_K - 1}),
-                i -> array_to_string(t[i:i+{_SUBSTR_K - 1}], ' '))) AS shingle
-  FROM toks WHERE len(t) >= {_SUBSTR_K}
-),
-ps AS (
-  SELECT doc_id, pos, shingle FROM ps_all
-  QUALIFY COUNT(*) OVER (PARTITION BY shingle)
-          <= (SELECT GREATEST({MAX_DF_FLOOR}, COUNT(*) // {MAX_DF_FRAC_DEN})
-              FROM documents)
-),
+WITH {_SQL_SEEDS},
 m AS (
   SELECT a.doc_id AS test_doc, b.doc_id AS train_doc,
          a.pos AS pos_a, a.pos - b.pos AS diag
@@ -635,15 +626,7 @@ def contamination_span_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     "stream_dedup_admission",
     tags=("streaming", "llm", "dedup", "admission", "minhash"),
     oracle=f"""
-WITH toks AS (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents),
-sh_all AS (
-  SELECT doc_id, unnest(
-    CASE WHEN len(t) >= 3 THEN list_distinct(
-           list_transform(generate_series(1, len(t) - 2),
-                          i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-         ELSE [array_to_string(t, ' ')] END) AS shingle
-  FROM toks
-),
+WITH {_SQL_SH_ALL},
 hm AS (SELECT doc_id, ({_SQL_H60} % {MINHASH_PRIME}) AS hm FROM sh_all),
 sig AS (SELECT doc_id, {", ".join(f"MIN(({a} * hm + {b}) % {MINHASH_PRIME}) AS mh{i}" for i, (a, b) in enumerate(minhash_params(16)))} FROM hm GROUP BY doc_id),
 banded AS (
@@ -778,30 +761,7 @@ def dedup_detector_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH {_SQL_SPANS},
 iv AS (
   -- DISTINCT: same twin-splitting hazard as dedup_span_coverage
-  SELECT DISTINCT doc_id, s, e FROM (
-    SELECT doc_a AS doc_id, start_a AS s,
-           start_a + span_tokens - 1 AS e FROM spans
-    UNION ALL
-    SELECT doc_b, start_b, start_b + span_tokens - 1 FROM spans
-  )
-),
-marked AS (
-  SELECT doc_id, s, e,
-         CASE WHEN s > COALESCE(MAX(e) OVER (PARTITION BY doc_id
-                ORDER BY s, e ROWS BETWEEN UNBOUNDED PRECEDING
-                AND 1 PRECEDING), -1) THEN 1 ELSE 0 END AS new_isl
-  FROM iv
-),
-isl2 AS (
-  SELECT doc_id, s, e,
-         SUM(new_isl) OVER (PARTITION BY doc_id ORDER BY s, e
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS isl
-  FROM marked
-),
-merged AS (
-  SELECT doc_id, isl, MIN(s) AS ms, MAX(e) AS me
-  FROM isl2 GROUP BY doc_id, isl
-),
+  {_SQL_MERGED_SPANS},
 cov AS (
   SELECT doc_id, CAST(SUM(me - ms + 1) AS BIGINT) AS covered
   FROM merged GROUP BY doc_id
@@ -974,15 +934,7 @@ def dedup_minhash_estimate_accuracy(spark: SparkSession, sf_dir: str) -> DataFra
     "text_ngram_novelty",
     tags=("llm", "text", "novelty", "incremental"),
     oracle=f"""
-WITH toks AS (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents),
-sh_all AS (
-  SELECT doc_id, unnest(
-    CASE WHEN len(t) >= 3 THEN list_distinct(
-           list_transform(generate_series(1, len(t) - 2),
-                          i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-         ELSE [array_to_string(t, ' ')] END) AS shingle
-  FROM toks
-),
+WITH {_SQL_SH_ALL},
 corpus_vocab AS (
   SELECT DISTINCT shingle FROM sh_all WHERE doc_id % 5 != 0
 ),

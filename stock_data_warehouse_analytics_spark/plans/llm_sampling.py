@@ -26,6 +26,53 @@ from .registry import register
 _SQL_H60 = "('0x' || substr(md5({x}), 1, 15))::BIGINT"
 
 
+def corpus_tag() -> F.Column:
+    """The notional corpus of a document: its source's int60 hash mod 3
+    as 'web' / 'books' / 'code'."""
+    h = hash_int60(F.col("source")) % 3
+    return F.when(h == 0, "web").when(h == 1, "books").otherwise("code")
+
+
+def _sql_mix_selected(keyhash: str) -> str:
+    """Final SELECT of a hash-membership corpus mix over ``tagged t`` and
+    ``rates r(corpus, n_avail, accept_rate)``: a row is selected when
+    ``keyhash`` mod 10^6 falls below its corpus's accept rate."""
+    return f"""SELECT t.corpus,
+       r.n_avail,
+       ROUND(r.accept_rate, 6) AS accept_rate,
+       COUNT(*) FILTER (
+         WHERE ({keyhash} % 1000000)
+               < floor(r.accept_rate * 1000000)::BIGINT
+       ) AS n_selected
+FROM tagged t JOIN rates r USING (corpus)
+GROUP BY t.corpus, r.n_avail, r.accept_rate
+ORDER BY t.corpus
+"""
+
+
+def mix_selected(tagged: DataFrame, rates: DataFrame) -> DataFrame:
+    """Spark mirror of :func:`_sql_mix_selected`: per corpus, n_avail,
+    the 6-dp accept rate and the count of rows whose
+    ``doc_id:text`` hash bucket falls below it (map-side accept against
+    the broadcast rate table)."""
+    keybucket = hash_int60(
+        F.concat(F.col("doc_id").cast("string"), F.lit(":"), F.col("text"))
+    ) % 1_000_000
+    sel = F.count(
+        F.when(
+            # explicit floor on both engines: DuckDB's ::BIGINT cast
+            # rounds to nearest, Spark's cast truncates
+            keybucket < F.floor(F.col("accept_rate") * 1_000_000).cast("long"), 1
+        )
+    ).alias("n_selected")
+    return (
+        tagged.join(F.broadcast(rates), "corpus")
+        .groupBy("corpus", "n_avail", F.round("accept_rate", 6).alias("accept_rate"))
+        .agg(sel)
+        .orderBy("corpus")
+    )
+
+
 @register(
     "sample_stratified_hash",
     tags=("llm", "sampling", "deterministic"),
@@ -208,17 +255,7 @@ rates AS (
            * n_total * {_MIX_BUDGET} / n_avail) AS accept_rate
   FROM sizes
 )
-SELECT t.corpus,
-       r.n_avail,
-       ROUND(r.accept_rate, 6) AS accept_rate,
-       COUNT(*) FILTER (
-         WHERE ({_SQL_H60.format(x="doc_id::VARCHAR || ':' || t.text")} % 1000000)
-               < floor(r.accept_rate * 1000000)::BIGINT
-       ) AS n_selected
-FROM tagged t JOIN rates r USING (corpus)
-GROUP BY t.corpus, r.n_avail, r.accept_rate
-ORDER BY t.corpus
-""",
+{_sql_mix_selected(_SQL_H60.format(x="doc_id::VARCHAR || ':' || t.text"))}""",
 )
 def mix_weighted_corpora(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic weighted dataset mixing: sources are grouped into
@@ -232,12 +269,7 @@ def mix_weighted_corpora(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB (the per-corpus rate table is bounded by the number of
     corpora, not rows)."""
     d = load_table(spark, sf_dir, "documents")
-    corpus = (
-        F.when(hash_int60(F.col("source")) % 3 == 0, "web")
-        .when(hash_int60(F.col("source")) % 3 == 1, "books")
-        .otherwise("code")
-    )
-    tagged = d.withColumn("corpus", corpus)
+    tagged = d.withColumn("corpus", corpus_tag())
     n_total = tagged.count()  # metadata-sized driver value (one long)
     w = (
         F.when(F.col("corpus") == "web", _MIX_WEIGHTS["web"])
@@ -252,19 +284,4 @@ def mix_weighted_corpora(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.least(F.lit(1.0), w * n_total * _MIX_BUDGET / F.col("n_avail")),
         )
     )
-    keybucket = hash_int60(
-        F.concat(F.col("doc_id").cast("string"), F.lit(":"), F.col("text"))
-    ) % 1_000_000
-    sel = F.count(
-        F.when(
-            # explicit floor on both engines: DuckDB's ::BIGINT cast
-            # rounds to nearest, Spark's cast truncates
-            keybucket < F.floor(F.col("accept_rate") * 1_000_000).cast("long"), 1
-        )
-    ).alias("n_selected")
-    return (
-        tagged.join(F.broadcast(rates), "corpus")
-        .groupBy("corpus", "n_avail", F.round("accept_rate", 6).alias("accept_rate"))
-        .agg(sel)
-        .orderBy("corpus")
-    )
+    return mix_selected(tagged, rates)

@@ -19,9 +19,8 @@ from ..functions.text import (
 )
 from ..sources.tables import load_table
 from .exact import dsum, sql_dsum
+from .llm_text import _SQL_TOKENS
 from .registry import register
-
-_SQL_TOKENS = r"string_split_regex(lower(trim(text)), '\s+')"
 
 
 def _sql_shingle_cte(k: int, extra_cols: str = "") -> str:

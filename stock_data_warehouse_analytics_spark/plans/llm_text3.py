@@ -14,9 +14,9 @@ from pyspark.sql import functions as F
 
 from ..functions.text import tokens
 from ..sources.tables import load_table
+from .llm_text import _SQL_TOKENS
 from .registry import register
 
-_SQL_TOKENS = r"string_split_regex(lower(trim(text)), '\s+')"
 
 # Repetition gate: a doc is flagged when under half its tokens are
 # distinct OR any single token exceeds a fifth of the text.  Ratios are

@@ -33,13 +33,39 @@ from ..operators.dedup import hash_int60
 from ..session import session_memo
 from ..sources.tables import load_table
 from .exact import dsum, sql_dsum
+from .llm_text import _SQL_TOKENS as _SQL_TOKS
 from .registry import register
 
-# DuckDB mirrors of functions.text.tokens and operators.dedup.hash_int60
-_SQL_TOKS = r"string_split_regex(lower(trim(text)), '\s+')"
+# DuckDB mirror of operators.dedup.hash_int60
 _SQL_H60 = "('0x' || substr(md5({x}), 1, 15))::BIGINT"
 
 _PPL_FLAG = 30.0  # gate threshold: ppl above this ⇒ "too surprising"
+
+# add-one bigram-LM perplexity per document over ``toks(doc_id, source,
+# t)``, ending in ``ppl(doc_id, source, ppl)`` (the doc_ppl_frame mirror)
+_SQL_DOC_PPL = f"""bi AS (
+  SELECT doc_id, source, t[i] AS w1, t[i + 1] AS w2
+  FROM toks, UNNEST(generate_series(1, len(t) - 1)) AS g(i)
+),
+c2 AS (SELECT w1, w2, COUNT(*) AS c12 FROM bi GROUP BY w1, w2),
+c1 AS (SELECT w1, COUNT(*) AS c1 FROM bi GROUP BY w1),
+vocab AS (
+  SELECT COUNT(DISTINCT w) AS v
+  FROM (SELECT unnest(t) AS w FROM toks)
+),
+scored AS (
+  SELECT b.doc_id, b.source,
+         LN((c2.c12 + 1)::DOUBLE / (c1.c1 + vocab.v)) AS lp
+  FROM bi b
+  JOIN c2 ON c2.w1 = b.w1 AND c2.w2 = b.w2
+  JOIN c1 ON c1.w1 = b.w1
+  CROSS JOIN vocab
+),
+ppl AS (
+  SELECT doc_id, source,
+         ROUND(EXP(-({sql_dsum("lp")}) / COUNT(*)), 6) AS ppl
+  FROM scored GROUP BY doc_id, source
+)"""
 
 
 def doc_ppl_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -100,29 +126,7 @@ def doc_ppl_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH toks AS (
   SELECT doc_id, source, {_SQL_TOKS} AS t FROM documents
 ),
-bi AS (
-  SELECT doc_id, source, t[i] AS w1, t[i + 1] AS w2
-  FROM toks, UNNEST(generate_series(1, len(t) - 1)) AS g(i)
-),
-c2 AS (SELECT w1, w2, COUNT(*) AS c12 FROM bi GROUP BY w1, w2),
-c1 AS (SELECT w1, COUNT(*) AS c1 FROM bi GROUP BY w1),
-vocab AS (
-  SELECT COUNT(DISTINCT w) AS v
-  FROM (SELECT unnest(t) AS w FROM toks)
-),
-scored AS (
-  SELECT b.doc_id, b.source,
-         LN((c2.c12 + 1)::DOUBLE / (c1.c1 + vocab.v)) AS lp
-  FROM bi b
-  JOIN c2 ON c2.w1 = b.w1 AND c2.w2 = b.w2
-  JOIN c1 ON c1.w1 = b.w1
-  CROSS JOIN vocab
-),
-ppl AS (
-  SELECT doc_id, source,
-         ROUND(EXP(-({sql_dsum("lp")}) / COUNT(*)), 6) AS ppl
-  FROM scored GROUP BY doc_id, source
-)
+{_SQL_DOC_PPL}
 SELECT source,
        COUNT(*) AS n_docs,
        ROUND({sql_dsum("ppl")} / COUNT(*), 6) AS avg_ppl,

@@ -40,21 +40,20 @@ from ..functions.text import (
     token_count,
     with_predicted_lang,
 )
-from ..operators.dedup import hash_int60
 from ..sources.tables import load_table
 from .llm_dedup import (
+    _CONTAM_MIN_SPAN,
     _cc_assignment,
-    _sql_minhash_ctes,
+    _SQL_CC_ASSIGN,
     _substring_spans,
     _SUBSTR_K,
 )
 from .llm_dedup import _SQL_TOKENS as _SQL_TOKS
+from .llm_sampling import corpus_tag
 from .llm_text2 import _MAX_TOKENS, _MIN_QUALITY, _MIN_TOKENS, _sql_keep
 from .registry import register
 from .tokenizer import _BUDGET_DEN, _BUDGET_W_PCT, _SQL_H60
 from ..operators.dedup import MAX_DF_FLOOR, MAX_DF_FRAC_DEN
-
-_CONTAM_MIN_SPAN = 13  # GPT-3-style rule, same as contamination_span_level
 
 # Positioned 8-gram span CTEs, k-prefixed so they can share one WITH
 # clause with the minhash CTE chain (which owns the name ``toks``).
@@ -118,20 +117,7 @@ def _sql_budget_case() -> str:
     "mix_training_manifest",
     tags=("llm", "mixing", "dedup", "quality", "contamination", "end-to-end"),
     oracle=f"""
-WITH RECURSIVE {_sql_minhash_ctes()},
-sym AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION
-  SELECT doc_b, doc_a FROM pairs
-),
-reach(node, comp) AS (
-  SELECT DISTINCT a, a FROM sym
-  UNION
-  SELECT s.a, r.comp FROM sym s JOIN reach r ON r.node = s.b
-),
-assign AS (
-  SELECT node AS doc_id, MIN(comp) AS cluster_id FROM reach GROUP BY node
-),
+WITH RECURSIVE {_SQL_CC_ASSIGN},
 {_SQL_CONTAM_CTES},
 pool AS (
   SELECT d.doc_id,
@@ -237,18 +223,13 @@ def mix_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         & token_count(t).between(_MIN_TOKENS, _MAX_TOKENS)
         & (quality_score(t) >= _MIN_QUALITY)
     )
-    corpus = (
-        F.when(hash_int60(F.col("source")) % 3 == 0, "web")
-        .when(hash_int60(F.col("source")) % 3 == 1, "books")
-        .otherwise("code")
-    )
     pool = (
         with_predicted_lang(
             d.filter(F.col("doc_id") % 2 == 0), "text", "_plang"
         )
         .select(
             "doc_id",
-            corpus.alias("corpus"),
+            corpus_tag().alias("corpus"),
             token_count(t).cast("long").alias("n_tokens"),
             q_keep.alias("q_keep"),
         )

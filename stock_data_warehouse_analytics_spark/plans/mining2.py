@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
 from ..operators.localrel import literal_df
+from .llm_text import _SQL_TOKENS
 from .registry import register
 
 _TOPK = 50
@@ -89,9 +90,6 @@ def mining_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_TOKENS = r"string_split_regex(lower(trim(text)), '\s+')"
-
-
 @register(
     "text_oov_rate",
     tags=("llm", "text", "vocab", "oov"),
@@ -155,8 +153,7 @@ def text_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ----------------------------------------- round-4 classifier + eval
 
-_SQL_TOKENS_M = r"string_split_regex(lower(trim(text)), '\s+')"
-_SQL_NTOK_M = f"len({_SQL_TOKENS_M})"
+_SQL_NTOK_M = f"len({_SQL_TOKENS})"
 _SQL_PUNCT_M = (
     r"((length(text) - length(regexp_replace(text, '[^\w\s]', '', 'g')))::DOUBLE"
     r" / length(text))"

@@ -16,6 +16,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
+from .behavioral import (
+    _SQL_CLICK_PAIRS,
+    _sql_ranked_touches,
+    click_pairs,
+    ranked_touches,
+)
 from .exact import dsum, sql_dsum
 from .registry import register
 
@@ -271,25 +277,16 @@ _US_PER_DAY = 86_400_000_000
     "attribution_time_decay",
     tags=("behavioral", "attribution", "decay", "join"),
     oracle=f"""
-WITH p AS (
-  SELECT event_id AS pid, user_id, epoch_us(ts) AS pu, value
-  FROM events WHERE event_type = 'purchase'
-),
-c AS (
-  SELECT event_id AS cid, user_id, epoch_us(ts) AS cu
-  FROM events WHERE event_type = 'click'
-),
-pairs AS (
-  SELECT pid, cid, value,
-         ((pu - cu) // {_US_PER_DAY}) // 7 AS weeks_back
-  FROM p JOIN c USING (user_id)
-  WHERE cu <= pu AND pu - cu < {_LOOKBACK_DAYS} * {_US_PER_DAY}
+WITH {_SQL_CLICK_PAIRS},
+weeks AS (
+  SELECT pid, cid, value, (age_us // {_US_PER_DAY}) // 7 AS weeks_back
+  FROM pairs WHERE age_us < {_LOOKBACK_DAYS} * {_US_PER_DAY}
 ),
 weighted AS (
   SELECT pid, cid, value, weeks_back,
          CASE weeks_back WHEN 0 THEN 1.0e0 WHEN 1 THEN 0.5e0
                          WHEN 2 THEN 0.25e0 ELSE 0.125e0 END AS w
-  FROM pairs
+  FROM weeks
 ),
 norm AS (
   SELECT pid, cid, weeks_back,
@@ -316,27 +313,13 @@ def attribution_time_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle compares bit-for-bit (the same reason the drift canary
     uses TVD, not KL).  Join is user-keyed (one shuffle; per-user
     activity bounds the pair fan-out), ages in integer microseconds."""
-    e = load_table(spark, sf_dir, "events")
-    us = lambda c: F.unix_micros(F.col(c).cast("timestamp"))  # noqa: E731
-    p = e.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("pid"), "user_id", us("ts").alias("pu"), "value"
-    )
-    c = e.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("cid"),
-        "user_id",
-        us("ts").alias("cu"),
-    )
+    age = F.col("age_us")
     pairs = (
-        p.join(c, "user_id")
-        .filter(
-            (F.col("cu") <= F.col("pu"))
-            & (F.col("pu") - F.col("cu") < _LOOKBACK_DAYS * _US_PER_DAY)
-        )
+        click_pairs(spark, sf_dir)
+        .filter(age < _LOOKBACK_DAYS * _US_PER_DAY)
         .withColumn(
             "weeks_back",
-            F.floor(F.floor((F.col("pu") - F.col("cu")) / _US_PER_DAY) / 7).cast(
-                "long"
-            ),
+            F.floor(F.floor(age / _US_PER_DAY) / 7).cast("long"),
         )
     )
     w = (
@@ -372,34 +355,17 @@ def attribution_time_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     "attribution_position_based",
     tags=("behavioral", "attribution", "position", "join"),
     oracle=f"""
-WITH p AS (
-  SELECT event_id AS pid, user_id, epoch_us(ts) AS pu, value
-  FROM events WHERE event_type = 'purchase'
-),
-c AS (
-  SELECT event_id AS cid, user_id, epoch_us(ts) AS cu
-  FROM events WHERE event_type = 'click'
-),
-pairs AS (
-  SELECT pid, cid, cu, value
-  FROM p JOIN c USING (user_id)
-  WHERE cu <= pu AND pu - cu < {_LOOKBACK_DAYS} * {_US_PER_DAY}
-),
-ranked AS (
-  SELECT pid, cid, value,
-         ROW_NUMBER() OVER (PARTITION BY pid ORDER BY cu, cid) AS rn,
-         COUNT(*) OVER (PARTITION BY pid) AS n
-  FROM pairs
-),
+WITH {_SQL_CLICK_PAIRS},
+{_sql_ranked_touches(f"< {_LOOKBACK_DAYS} * {_US_PER_DAY}")},
 weighted AS (
   SELECT pid, cid, value,
          CASE WHEN rn = 1 THEN 'first'
-              WHEN rn = n THEN 'last'
+              WHEN rn = k THEN 'last'
               ELSE 'middle' END AS position,
-         CASE WHEN n = 1 THEN 1.0e0
-              WHEN n = 2 THEN 0.5e0
-              WHEN rn = 1 OR rn = n THEN 0.4e0
-              ELSE 0.2e0 / (n - 2) END AS w
+         CASE WHEN k = 1 THEN 1.0e0
+              WHEN k = 2 THEN 0.5e0
+              WHEN rn = 1 OR rn = k THEN 0.4e0
+              ELSE 0.2e0 / (k - 2) END AS w
   FROM ranked
 )
 SELECT position,
@@ -432,40 +398,21 @@ def attribution_position_based(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one user-keyed join (per-user activity bounds the
     fan-out), per-purchase windows partitioned by pid — no global
     sort, no single partition."""
-    e = load_table(spark, sf_dir, "events")
-    us = lambda c: F.unix_micros(F.col(c).cast("timestamp"))  # noqa: E731
-    p = e.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("pid"),
-        "user_id",
-        us("ts").alias("pu"),
-        "value",
-    )
-    c = e.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("cid"), "user_id", us("ts").alias("cu")
-    )
-    pairs = p.join(c, "user_id").filter(
-        (F.col("cu") <= F.col("pu"))
-        & (F.col("pu") - F.col("cu") < _LOOKBACK_DAYS * _US_PER_DAY)
-    )
-    w_rn = Window.partitionBy("pid").orderBy("cu", "cid")
-    w_n = Window.partitionBy("pid")
-    ranked = pairs.select(
-        "pid",
-        "cid",
-        "value",
-        F.row_number().over(w_rn).alias("rn"),
-        F.count(F.lit(1)).over(w_n).alias("n"),
+    ranked = ranked_touches(
+        click_pairs(spark, sf_dir).filter(
+            F.col("age_us") < _LOOKBACK_DAYS * _US_PER_DAY
+        )
     )
     position = (
         F.when(F.col("rn") == 1, "first")
-        .when(F.col("rn") == F.col("n"), "last")
+        .when(F.col("rn") == F.col("k"), "last")
         .otherwise("middle")
     )
     w = (
-        F.when(F.col("n") == 1, F.lit(1.0))
-        .when(F.col("n") == 2, F.lit(0.5))
-        .when((F.col("rn") == 1) | (F.col("rn") == F.col("n")), F.lit(0.4))
-        .otherwise(F.lit(0.2) / (F.col("n") - 2))
+        F.when(F.col("k") == 1, F.lit(1.0))
+        .when(F.col("k") == 2, F.lit(0.5))
+        .when((F.col("rn") == 1) | (F.col("rn") == F.col("k")), F.lit(0.4))
+        .otherwise(F.lit(0.2) / (F.col("k") - 2))
     )
     return (
         ranked.select(

@@ -23,9 +23,9 @@ from pyspark.sql import functions as F
 
 from ..functions.text import tokens
 from ..sources.tables import load_table
+from .llm_text import _SQL_TOKENS
 from .registry import register
 
-_SQL_TOKENS = r"string_split_regex(lower(trim(text)), '\s+')"
 
 # mid-frequency corpus terms — fixed probe query, identical literals in
 # both engines
@@ -33,8 +33,10 @@ _QUERY_TERMS = ("spark", "window", "merge")
 _K1, _B = 1.2, 0.75
 
 
-_BM25_ORACLE = f"""
-WITH dlen AS (
+# the BM25 inputs (doc lengths, corpus scalars, probe-term tf and df) and
+# the exact per-(doc, term) impact in nano-units, ending in
+# ``scored(doc_id, score_nano)``
+_SQL_BM25_SCORED = f"""dlen AS (
   SELECT doc_id, len({_SQL_TOKENS}) AS dl FROM documents
 ),
 scal AS (
@@ -65,7 +67,10 @@ scored AS (
   JOIN dlen ON tf.doc_id = dlen.doc_id
   JOIN dfs ON tf.term = dfs.term
   CROSS JOIN scal
-)
+)"""
+
+_BM25_ORACLE = f"""
+WITH {_SQL_BM25_SCORED}
 SELECT doc_id,
        COUNT(*) AS n_terms_matched,
        ROUND(CAST(SUM(score_nano) AS DOUBLE) / 1000000000, 6) AS bm25
@@ -74,6 +79,81 @@ GROUP BY doc_id
 ORDER BY SUM(score_nano) DESC, doc_id
 LIMIT 20
 """
+
+
+def _bm25_inputs(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """(tf, dlen, dfs, scal): probe-term frequencies per (doc, term),
+    document lengths, probe-term document frequencies and the one-row
+    (n_docs, avgdl) corpus scalars.  Tokens are filtered to the probe
+    terms BEFORE the (doc, term) shuffle, so tf is hit-sized."""
+    docs = load_table(spark, sf_dir, "documents")
+    dlen = docs.select("doc_id", F.size(tokens(F.col("text"))).alias("dl"))
+    scal = dlen.agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
+    )
+    tok = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("term"))
+    tf = (
+        tok.filter(F.col("term").isin(*_QUERY_TERMS))
+        .groupBy("doc_id", "term")
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
+    dfs = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    return tf, dlen, dfs, scal
+
+
+def _bm25_impact(norm: F.Column) -> F.Column:
+    """Per-(doc, term) BM25 impact idf·tf(k1+1)/(tf + k1·norm) over the
+    tf, df and n_docs columns, for the length normalizer ``norm``."""
+    idf = F.log(
+        F.lit(1.0)
+        + (F.col("n_docs") - F.col("df") + F.lit(0.5))
+        / (F.col("df") + F.lit(0.5))
+    )
+    tf_d = F.col("tf").cast("double")
+    return idf * (tf_d * F.lit(_K1 + 1.0)) / (tf_d + F.lit(_K1) * norm)
+
+
+def _bm25_scored(
+    tf: DataFrame, dlen: DataFrame, dfs: DataFrame, scal: DataFrame
+) -> DataFrame:
+    """(doc_id, score_nano): the exact per-(doc, term) BM25 impact of
+    each tf row, quantized to integer nano-units."""
+    exact = _bm25_impact(
+        F.lit(1.0 - _B) + F.lit(_B) * (F.col("dl") / F.col("avgdl"))
+    )
+    return (
+        tf.join(dlen, "doc_id")
+        .join(F.broadcast(dfs), "term")
+        .crossJoin(F.broadcast(scal))
+        .select(
+            "doc_id",
+            F.round(exact * 1000000000, 0).cast("bigint").alias("score_nano"),
+        )
+    )
+
+
+def _bm25_top20(scored: DataFrame) -> DataFrame:
+    """(doc_id, n_terms_matched, bm25): the 20 best per-doc nano-score
+    sums, doc_id tiebreak (a TakeOrderedAndProject, no global sort)."""
+    return (
+        scored.groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_terms_matched"),
+            F.sum("score_nano").alias("nano"),
+        )
+        .orderBy(F.desc("nano"), "doc_id")
+        .limit(20)
+        .select(
+            "doc_id",
+            "n_terms_matched",
+            F.round(F.col("nano").cast("double") / 1000000000, 6).alias(
+                "bm25"
+            ),
+        )
+    )
 
 
 @register(
@@ -93,68 +173,7 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     table is the only corpus-grain join side and it is map-only derived
     from the scan; top-k is a TakeOrderedAndProject on the integer
     nano-score with doc_id tiebreak — no global sort materializes."""
-    docs = load_table(spark, sf_dir, "documents")
-    dlen = docs.select(
-        "doc_id", F.size(tokens(F.col("text"))).alias("dl")
-    )
-    scal = dlen.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-    )
-    tok = docs.select(
-        "doc_id", F.explode(tokens(F.col("text"))).alias("term")
-    )
-    tf = (
-        tok.filter(F.col("term").isin(*_QUERY_TERMS))
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    dfs = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("n_docs") - F.col("df") + F.lit(0.5))
-        / (F.col("df") + F.lit(0.5))
-    )
-    tf_d = F.col("tf").cast("double")
-    score = (
-        idf
-        * (tf_d * F.lit(_K1 + 1.0))
-        / (
-            tf_d
-            + F.lit(_K1)
-            * (
-                F.lit(1.0 - _B)
-                + F.lit(_B) * (F.col("dl") / F.col("avgdl"))
-            )
-        )
-    )
-    scored = (
-        tf.join(dlen, "doc_id")
-        .join(F.broadcast(dfs), "term")
-        .crossJoin(F.broadcast(scal))
-        .select(
-            "doc_id",
-            F.round(score * 1000000000, 0)
-            .cast("bigint")
-            .alias("score_nano"),
-        )
-    )
-    return (
-        scored.groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_terms_matched"),
-            F.sum("score_nano").alias("nano"),
-        )
-        .orderBy(F.desc("nano"), "doc_id")
-        .limit(20)
-        .select(
-            "doc_id",
-            "n_terms_matched",
-            F.round(F.col("nano").cast("double") / 1000000000, 6).alias(
-                "bm25"
-            ),
-        )
-    )
+    return _bm25_top20(_bm25_scored(*_bm25_inputs(spark, sf_dir)))
 
 
 @register(
@@ -194,47 +213,9 @@ def text_bm25_topk_maxscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the hit-sized tf table.  The candidate-reduction ratio is
     measured (tests/test_retrieval_pruning.py + PERF.md), not claimed.
     """
-    docs = load_table(spark, sf_dir, "documents")
-    dlen = docs.select(
-        "doc_id", F.size(tokens(F.col("text"))).alias("dl")
-    )
-    scal = dlen.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-    )
-    tok = docs.select(
-        "doc_id", F.explode(tokens(F.col("text"))).alias("term")
-    )
-    tf = (
-        tok.filter(F.col("term").isin(*_QUERY_TERMS))
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    dfs = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("n_docs") - F.col("df") + F.lit(0.5))
-        / (F.col("df") + F.lit(0.5))
-    )
-    tf_d = F.col("tf").cast("double")
-    exact_score = (
-        idf
-        * (tf_d * F.lit(_K1 + 1.0))
-        / (
-            tf_d
-            + F.lit(_K1)
-            * (
-                F.lit(1.0 - _B)
-                + F.lit(_B) * (F.col("dl") / F.col("avgdl"))
-            )
-        )
-    )
+    tf, dlen, dfs, scal = _bm25_inputs(spark, sf_dir)
     # dl-free upper bound (dl → 0 in the normalizer)
-    ub_score = (
-        idf
-        * (tf_d * F.lit(_K1 + 1.0))
-        / (tf_d + F.lit(_K1) * F.lit(1.0 - _B))
-    )
+    ub_score = _bm25_impact(F.lit(1.0 - _B))
     bounded = (
         tf.join(F.broadcast(dfs), "term")
         .crossJoin(F.broadcast(scal))
@@ -259,16 +240,9 @@ def text_bm25_topk_maxscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # forced broadcast — the optimizer picks; at 100 TB this is the
     # same hit-sized equi-join family as the tf table itself
     seed_scored = (
-        tf.join(seed_ids, "doc_id")
-        .join(dlen, "doc_id")
-        .join(F.broadcast(dfs), "term")
-        .crossJoin(F.broadcast(scal))
+        _bm25_scored(tf.join(seed_ids, "doc_id"), dlen, dfs, scal)
         .groupBy("doc_id")
-        .agg(
-            F.sum(
-                F.round(exact_score * 1000000000, 0).cast("bigint")
-            ).alias("nano")
-        )
+        .agg(F.sum("score_nano").alias("nano"))
     )
     theta = (
         seed_scored.orderBy(F.desc("nano"), "doc_id")
@@ -285,33 +259,8 @@ def text_bm25_topk_maxscore(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
     # phase 2: the unpruned scoring path, survivors only
-    scored = (
-        tf.join(survivors, "doc_id")
-        .join(dlen, "doc_id")
-        .join(F.broadcast(dfs), "term")
-        .crossJoin(F.broadcast(scal))
-        .select(
-            "doc_id",
-            F.round(exact_score * 1000000000, 0)
-            .cast("bigint")
-            .alias("score_nano"),
-        )
-    )
-    return (
-        scored.groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_terms_matched"),
-            F.sum("score_nano").alias("nano"),
-        )
-        .orderBy(F.desc("nano"), "doc_id")
-        .limit(20)
-        .select(
-            "doc_id",
-            "n_terms_matched",
-            F.round(F.col("nano").cast("double") / 1000000000, 6).alias(
-                "bm25"
-            ),
-        )
+    return _bm25_top20(
+        _bm25_scored(tf.join(survivors, "doc_id"), dlen, dfs, scal)
     )
 
 
@@ -325,38 +274,7 @@ _NDCG_GAIN_SQL = (
     "eval_ranking_ndcg",
     tags=("llm", "retrieval", "eval", "ndcg"),
     oracle=f"""
-WITH dlen AS (
-  SELECT doc_id, len({_SQL_TOKENS}) AS dl FROM documents
-),
-scal AS (
-  SELECT COUNT(*) AS n_docs,
-         CAST(SUM(dl) AS DOUBLE) / COUNT(*) AS avgdl
-  FROM dlen
-),
-tok AS (
-  SELECT doc_id, unnest({_SQL_TOKENS}) AS term FROM documents
-),
-tf AS (
-  SELECT doc_id, term, COUNT(*) AS tf FROM tok
-  WHERE term IN ('spark', 'window', 'merge')
-  GROUP BY doc_id, term
-),
-dfs AS (
-  SELECT term, COUNT(*) AS df FROM tf GROUP BY term
-),
-scored AS (
-  SELECT tf.doc_id,
-         CAST(ROUND(
-           LN(1.0e0 + (scal.n_docs - dfs.df + 0.5e0) / (dfs.df + 0.5e0))
-           * (CAST(tf.tf AS DOUBLE) * 2.2e0)
-           / (CAST(tf.tf AS DOUBLE)
-              + 1.2e0 * (0.25e0 + 0.75e0 * (dlen.dl / scal.avgdl)))
-           * 1000000000, 0) AS BIGINT) AS score_nano
-  FROM tf
-  JOIN dlen ON tf.doc_id = dlen.doc_id
-  JOIN dfs ON tf.term = dfs.term
-  CROSS JOIN scal
-),
+WITH {_SQL_BM25_SCORED},
 per_doc AS (
   SELECT doc_id, COUNT(*) AS rel, SUM(score_nano) AS nano
   FROM scored GROUP BY doc_id
@@ -408,41 +326,8 @@ def eval_ranking_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     on bounded frames at ANY corpus size."""
     from pyspark.sql import Window
 
-    docs = load_table(spark, sf_dir, "documents")
-    dlen = docs.select("doc_id", F.size(tokens(F.col("text"))).alias("dl"))
-    scal = dlen.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-    )
-    tok = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("term"))
-    tf = (
-        tok.filter(F.col("term").isin(*_QUERY_TERMS))
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    dfs = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-    )
-    tf_d = F.col("tf").cast("double")
-    score = (
-        idf
-        * (tf_d * F.lit(_K1 + 1.0))
-        / (
-            tf_d
-            + F.lit(_K1)
-            * (F.lit(1.0 - _B) + F.lit(_B) * (F.col("dl") / F.col("avgdl")))
-        )
-    )
     per_doc = (
-        tf.join(dlen, "doc_id")
-        .join(F.broadcast(dfs), "term")
-        .crossJoin(F.broadcast(scal))
-        .select(
-            "doc_id",
-            F.round(score * 1000000000, 0).cast("bigint").alias("score_nano"),
-        )
+        _bm25_scored(*_bm25_inputs(spark, sf_dir))
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("rel"), F.sum("score_nano").alias("nano"))
         # hit-sized (docs matching ≥1 probe term) and consumed by THREE

@@ -26,11 +26,10 @@ from ..functions.text import (
 )
 from ..operators.dedup import hash_int60
 from ..sources.tables import load_table
-from .llm_text import _SQL_BPE
+from .llm_text import _SQL_BPE, _SQL_TOKENS as _SQL_TOKS
 from .registry import register
 
 _SQL_H60 = "('0x' || substr(md5({x}), 1, 15))::BIGINT"
-_SQL_TOKS = r"string_split_regex(lower(trim(text)), '\s+')"
 _SQL_NTOK = f"len({_SQL_TOKS})"
 
 # ------------------------------------------------------- relational HLL

@@ -38,10 +38,10 @@ from ..operators.dedup import hash_int60
 from ..operators.similarity import normalize, topk_bruteforce
 from ..sources.tables import load_table
 from .exact import dsum, sql_dsum
+from .llm_text import _SQL_TOKENS as _SQL_TOKS
 from .registry import register
 
-# DuckDB mirrors of functions.text.tokens and operators.dedup.hash_int60
-_SQL_TOKS = r"string_split_regex(lower(trim(text)), '\s+')"
+# DuckDB mirror of operators.dedup.hash_int60
 _SQL_H60 = "('0x' || substr(md5({x}), 1, 15))::BIGINT"
 
 

@@ -31,9 +31,10 @@ from ..functions.text import tokens
 from ..operators.ranking import bucketed_global_rank
 from ..sources.tables import load_table
 from .exact import dsum, sql_dsum
+from .lm import _SQL_DOC_PPL
+from .llm_text import _SQL_TOKENS as _SQL_TOKS
 from .registry import register
 
-_SQL_TOKS = r"string_split_regex(lower(trim(text)), '\s+')"
 
 # --------------------------------------------------------------------------
 # Interpolated Kneser–Ney bigram perplexity
@@ -208,29 +209,7 @@ _CURR_PHASES = 4
     tags=("llm", "mixing", "curriculum", "schedule"),
     oracle=f"""
 WITH toks AS (SELECT doc_id, source, {_SQL_TOKS} AS t FROM documents),
-bi AS (
-  SELECT doc_id, source, t[i] AS w1, t[i + 1] AS w2
-  FROM toks, UNNEST(generate_series(1, len(t) - 1)) AS g(i)
-),
-c2 AS (SELECT w1, w2, COUNT(*) AS c12 FROM bi GROUP BY w1, w2),
-c1 AS (SELECT w1, COUNT(*) AS c1 FROM bi GROUP BY w1),
-vocab AS (
-  SELECT COUNT(DISTINCT w) AS v
-  FROM (SELECT unnest(t) AS w FROM toks)
-),
-scored AS (
-  SELECT b.doc_id, b.source,
-         LN((c2.c12 + 1)::DOUBLE / (c1.c1 + vocab.v)) AS lp
-  FROM bi b
-  JOIN c2 ON c2.w1 = b.w1 AND c2.w2 = b.w2
-  JOIN c1 ON c1.w1 = b.w1
-  CROSS JOIN vocab
-),
-ppl AS (
-  SELECT doc_id, source,
-         ROUND(EXP(-({sql_dsum("lp")}) / COUNT(*)), 6) AS ppl
-  FROM scored GROUP BY doc_id, source
-),
+{_SQL_DOC_PPL},
 ranked AS (
   SELECT p.doc_id, p.source, p.ppl, len(tk.t) AS n_tokens,
          ROW_NUMBER() OVER (

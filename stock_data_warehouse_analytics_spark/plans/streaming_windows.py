@@ -131,18 +131,22 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("click_id", "purchase_id")
 
 
-@register(
-    "stream_left_outer_join",
-    tags=("streaming", "join", "outer", "watermark"),
-    oracle="""
-WITH c AS (
+# the click side ``c`` and purchase side ``p`` of the interval joins
+_SQL_CLICKS_PURCHASES = """c AS (
   SELECT user_id, event_id AS click_id, ts AS click_ts
   FROM events WHERE event_type = 'click'
 ), p AS (
   SELECT user_id AS p_user, event_id AS purchase_id, ts AS purchase_ts,
          value AS purchase_value
   FROM events WHERE event_type = 'purchase'
-), m AS (
+)"""
+
+
+@register(
+    "stream_left_outer_join",
+    tags=("streaming", "join", "outer", "watermark"),
+    oracle=f"""
+WITH {_SQL_CLICKS_PURCHASES}, m AS (
   SELECT MAX(ts) - INTERVAL 2 HOUR - INTERVAL 30 MINUTE AS evict_before
   FROM events
 )
@@ -177,15 +181,8 @@ def stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stream_full_outer_join",
     tags=("streaming", "join", "outer", "watermark"),
-    oracle="""
-WITH c AS (
-  SELECT user_id, event_id AS click_id, ts AS click_ts
-  FROM events WHERE event_type = 'click'
-), p AS (
-  SELECT user_id AS p_user, event_id AS purchase_id, ts AS purchase_ts,
-         value AS purchase_value
-  FROM events WHERE event_type = 'purchase'
-), m AS (
+    oracle=f"""
+WITH {_SQL_CLICKS_PURCHASES}, m AS (
   SELECT MAX(ts) - INTERVAL 2 HOUR - INTERVAL 30 MINUTE AS click_evict,
          MAX(ts) - INTERVAL 2 HOUR AS purchase_evict
   FROM events

@@ -12,6 +12,7 @@ from ..functions.text import tokens
 from ..operators.text_ml import bpe_train_merges
 from ..session import session_memo
 from ..sources.tables import load_table
+from .llm_sampling import corpus_tag
 from .registry import register
 
 
@@ -110,17 +111,11 @@ def mix_token_budget_per_domain(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from ..functions.text import token_count
-    from ..operators.dedup import hash_int60
 
     d = load_table(spark, sf_dir, "documents")
-    corpus = (
-        F.when(hash_int60(F.col("source")) % 3 == 0, "web")
-        .when(hash_int60(F.col("source")) % 3 == 1, "books")
-        .otherwise("code")
-    )
     tagged = d.select(
         "doc_id",
-        corpus.alias("corpus"),
+        corpus_tag().alias("corpus"),
         token_count(F.col("text")).cast("long").alias("n_tokens"),
     )
     tot = tagged.agg(F.sum("n_tokens").cast("long").alias("total_tokens"))
@@ -387,17 +382,11 @@ def mix_epoch_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-row total broadcast — ceil-division via ``(need + avail − 1)
     div avail`` keeps every boundary integer-exact on both engines."""
     from ..functions.text import token_count
-    from ..operators.dedup import hash_int60
 
     d = load_table(spark, sf_dir, "documents")
-    corpus = (
-        F.when(hash_int60(F.col("source")) % 3 == 0, "web")
-        .when(hash_int60(F.col("source")) % 3 == 1, "books")
-        .otherwise("code")
-    )
     avail = (
         d.select(
-            corpus.alias("corpus"),
+            corpus_tag().alias("corpus"),
             token_count(F.col("text")).cast("long").alias("n_tokens"),
         )
         .groupBy("corpus")

@@ -3,6 +3,9 @@
 
 Run after adding/changing a registered query:
     python tools/gen_queries_md.py
+
+``tests/test_properties.py`` compares the committed file with
+``render()``, so a stale catalog fails the suite.
 """
 
 from __future__ import annotations
@@ -19,9 +22,11 @@ from stock_data_warehouse_analytics_spark.plans.registry import (  # noqa: E402
 )
 
 MAX_DOC = 155
+OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "QUERIES.md")
 
 
-def main() -> None:
+def render() -> str:
+    """The full QUERIES.md text for the live registry."""
     _ensure_loaded()
     n = len(QUERIES)
     n_oracle = sum(1 for s in QUERIES.values() if s.oracle is not None)
@@ -52,10 +57,13 @@ def main() -> None:
             doc = doc[:MAX_DOC] + "..."
         kind = "exact" if spec.oracle is not None else "rows-only"
         lines.append(f"| `{name}` | {kind} | {', '.join(spec.tags)} | {doc} |")
-    out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "QUERIES.md")
-    with open(out, "w") as f:
-        f.write("\n".join(lines) + "\n")
-    print(f"wrote {out}: {n} queries ({n_oracle} oracle, {n - n_oracle} rows-only)")
+    return "\n".join(lines) + "\n"
+
+
+def main() -> None:
+    with open(OUT, "w") as f:
+        f.write(render())
+    print(f"wrote {OUT}: {len(QUERIES)} queries")
 
 
 if __name__ == "__main__":
